@@ -5,9 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Star-schema table loaders over the driver's parquet test data
   * (SURVEY.md §2.1 S10, TESTDATA.md).
   *
-  * Scale posture: `spark.read.parquet` is a v2 FileScan — partition
-  * discovery, column pruning and filter pushdown are handled by
-  * Catalyst, so every downstream operator in this library composes a
+  * Scale posture: a parquet read plans as a V1 `FileSourceScanExec`
+  * (parquet is in `spark.sql.sources.useV1SourceList` by default) —
+  * partition discovery, column pruning and filter pushdown are handled
+  * by Catalyst, so every downstream operator in this library composes a
   * declarative plan on top of a prunable columnar scan. At 100 TB the
   * same call reads a directory of thousands of files; nothing here
   * assumes a single file.
@@ -17,9 +18,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Table `name` of the lake at `dir`. The schema comes from one parquet
+    * footer read on the driver ([[ParquetRead]]) — the footer Spark's own
+    * inference would pick — so constructing the frame runs no Spark job. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else fanOut(spark, spark.read.parquet(s"$dir/$name.parquet"),
+    else fanOut(spark, ParquetRead(spark, s"$dir/$name.parquet"),
       s"$dir/$name.parquet")
 
   /** The harness parquet files are written as ONE row group each, so a
@@ -74,7 +78,7 @@ object Tables {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = ParquetRead(spark, s"$dir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       case LongType => expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
       case TimestampNTZType => col("ts")

@@ -39,10 +39,7 @@ object Verify {
         (n.startsWith("graft_") && n.endsWith("_cache")) ||
           n.startsWith("media_")
       }
-      .foreach { f =>
-        Files.walk(f.toPath).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      }
+      .foreach(f => Fs.deleteTree(f.toPath))
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

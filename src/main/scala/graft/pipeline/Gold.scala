@@ -52,7 +52,18 @@ object Gold {
     * sf0.1 and a scale-killer at 100×). Only when the file metadata
     * trips does the row-hash tier run, and it still localizes the
     * rebuild to |changed months| (GoldIncrementalSpec's one-month
-    * receipt is unchanged). */
+    * receipt is unchanged).
+    *
+    * The served table's schema comes from one parquet footer read on the
+    * driver (`Incremental.read` via [[graft.ParquetRead]]), and the frame
+    * is read as ONE partition: a served gold table holds |groups| rows
+    * (one per month, or per carrier and month), small at any scale, so
+    * the registered ORDER BY runs as a local sort — no range-partition
+    * sampling job and no exchange. On an unchanged lake a served gold
+    * query therefore plans without a job and executes as exactly one
+    * (GoldServeCostSpec); past 32 months Spark lists the partition
+    * directories with one more job at planning
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). */
   private def servedGold(spark: SparkSession, dir: String, name: String,
       build: DataFrame => DataFrame): DataFrame = {
     val root = new java.io.File(
@@ -60,6 +71,7 @@ object Gold {
         java.net.URLEncoder.encode(dir, "UTF-8") + s"/$name").getAbsolutePath
     graft.sources.Incremental.serve(spark,
       FlightPipeline.master(spark, dir), "year_month", build, root)
+      .coalesce(1)
   }
 
   /** The per-month GOLD_CARRIER derivation `refresh` runs on stale

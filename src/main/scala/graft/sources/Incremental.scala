@@ -365,12 +365,16 @@ object Incremental {
     * swap = a reader planned mid-refresh still reads one consistent
     * snapshot. The derived frame's own `partCol` column is stored IN
     * the data files (`__gpart` is a write-layout duplicate), so no
-    * partition-column inference is involved. */
+    * partition-column inference is involved. The schema is read on the
+    * driver from the footer Spark's inference would pick
+    * ([[graft.ParquetRead]]), so the read runs no schema-inference job
+    * (more than 32 partition directories are still listed by a Spark
+    * job: `spark.sql.sources.parallelPartitionDiscovery.threshold`). */
   def read(spark: SparkSession, path: String): DataFrame = {
     val entries = currentEntries(path).filter(_.dir.nonEmpty)
     require(entries.nonEmpty, s"no committed materialization at $path")
     val dirs = entries.map(e => s"$path/gen=${e.gen}/${e.dir}")
-    spark.read.parquet(dirs: _*)
+    graft.ParquetRead(spark, dirs: _*)
   }
 
   /** Small-file compaction — the table-maintenance pass every
@@ -406,7 +410,7 @@ object Incremental {
     // the data files carry the original partCol (the __gpart write
     // layout column is a stripped duplicate), so the rewrite re-derives
     // its hive subdirs from data, not from path-name parsing
-    spark.read.parquet(dirs: _*)
+    graft.ParquetRead(spark, dirs: _*)
       .withColumn("__gpart", col(partCol).cast("string"))
       .repartition(col("__gpart"))
       .write.partitionBy("__gpart")
@@ -438,16 +442,13 @@ object Incremental {
     listNames(root).filter(_.startsWith("gen=")).foreach { g =>
       listNames(root.resolve(g)).filter(_.startsWith("__gpart=")).foreach { d =>
         if (!live.contains(s"$g/$d")) {
-          val dir = root.resolve(g).resolve(d)
-          Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.delete(p))
+          graft.Fs.deleteTree(root.resolve(g).resolve(d))
           deleted += s"$g/$d"
         }
       }
       if (!listNames(root.resolve(g)).exists(_.startsWith("__gpart="))) {
         // no partition data left (only _SUCCESS/.crc metadata): drop the gen
-        Files.walk(root.resolve(g)).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+        graft.Fs.deleteTree(root.resolve(g))
       }
     }
     deleted.result()

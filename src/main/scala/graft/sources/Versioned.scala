@@ -203,10 +203,7 @@ object Versioned {
     val deletable = all.filter(v => v < oldestKept &&
       !referenced.contains(dataDir(root, v)))
     deletable.foreach { v =>
-      val dir = Paths.get(dataDir(root, v))
-      if (Files.exists(dir))
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      graft.Fs.deleteTree(Paths.get(dataDir(root, v)))
       Files.deleteIfExists(markerPath(root, v))
     }
     deletable
@@ -226,10 +223,7 @@ object Versioned {
     val orphans = listNames(r)
       .filter(n => n.startsWith("d-") && !referenced.contains(n)
         && Files.isDirectory(r.resolve(n)))
-    orphans.foreach { n =>
-      Files.walk(r.resolve(n)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    orphans.foreach(n => graft.Fs.deleteTree(r.resolve(n)))
     orphans
   }
 }

@@ -93,12 +93,7 @@ object LineSink {
       new String(java.nio.file.Files.readAllBytes(fpFile.toPath),
         "UTF-8") == fp
     if (!cached) {
-      val r = new java.io.File(root)
-      if (r.exists()) {
-        java.nio.file.Files.walk(r.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-      }
+      graft.Fs.deleteTree(java.nio.file.Paths.get(root))
       spark.read.parquet(s"$dir/nation.parquet")
         .select(col("n_nationkey").cast("long").as("k"),
           col("n_name"), col("n_regionkey").cast("long").as("rk"))
