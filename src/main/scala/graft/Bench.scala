@@ -11,37 +11,49 @@ import org.apache.spark.sql.SparkSession
   * would pay) while writing nothing.
   */
 object Bench {
+  /** The one Spark session of the program: Bench, Verify, the test suites
+    * (`SparkSpec`) and every tool under `graft.tools` plan under it, so
+    * the tested, verified, profiled and benched plans are the same.
+    *
+    * The chain lives here, first in this file, because the benchmark
+    * build (`perfbench/run.py`, `check_session`) reads the first session
+    * builder chain of `Bench.scala` and refuses to build unless its calls
+    * equal the benchmark session's; keep its calls in step with
+    * `perfbench/src/Main.scala`. */
+  def session(cpus: String): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    // static conf, default 100 generated classes: a 120+-query
+    // registry × several codegen stages each thrashes it completely,
+    // so pass 2 re-pays Janino for EVERY query and min-of-2 never
+    // sees steady state (measured: dedup_clusters 19.7s both passes
+    // vs 4.6s in-session steady). Size it to hold the whole registry.
+    .config("spark.sql.codegen.cache.maxEntries", "5000")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    // allow shuffled-hash join where its size conditions hold instead
+    // of always sort-merge (no sort pass), and let AQE rewrite a planned
+    // SMJ to SHJ when every post-shuffle partition is small. Both are
+    // size-gated planner choices, not local-mode tuning: the same
+    // settings are the production recommendation, and partitions that
+    // exceed the threshold keep sort-merge.
+    .config("spark.sql.join.preferSortMergeJoin", "false")
+    .config(
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  /** Local slots for the mains and tools: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // dev-only: optional query-name filter (driver passes no args)
     val only = args.toSet
     def selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, default 100 generated classes: a 120+-query
-      // registry × several codegen stages each thrashes it completely,
-      // so pass 2 re-pays Janino for EVERY query and min-of-2 never
-      // sees steady state (measured: dedup_clusters 19.7s both passes
-      // vs 4.6s in-session steady). Size it to hold the whole registry.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // r15 (guide §3.1/§9): allow shuffled-hash join where its size
-      // conditions hold instead of always sort-merge (no sort pass),
-      // and let AQE rewrite a planned SMJ to SHJ when every post-
-      // shuffle partition is small. Both are size-gated planner
-      // choices, not local-mode tuning: the same settings are the
-      // production recommendation, and partitions that exceed the
-      // threshold keep sort-merge.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     Det.silenceBenignWindowWarning()
     // JVM/codegen warm-up outside the timed region: run every query once

@@ -14,74 +14,53 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     pipeline.Gold.goldMonthly(spark, "/root/testdata/sf0.001")
 
+  /** The registering modules, each listed once. */
+  lazy val modules: Seq[QueryModule] = Seq(
+    pipeline.Gold,
+    pipeline.Views,
+    pipeline.SilverJson,
+    sources.AvroBronze,
+    sources.CsvBronze,
+    sources.XmlBronze,
+    sources.JsonLake,
+    sources.OrcLake,
+    sources.v2.Synth,
+    sources.v2.LineSink,
+    star.Joins,
+    star.Salting,
+    star.Windows,
+    star.Aggs,
+    star.SetOps,
+    star.Extended,
+    star.EventWindows,
+    star.Warehouse,
+    star.Calendar,
+    star.SqlFeatures,
+    star.ZOrder,
+    star.Tpch,
+    star.Inference,
+    star.Linkage,
+    star.Attribution,
+    llm.Dedup,
+    llm.Curate,
+    llm.Cluster,
+    llm.Search,
+    llm.TextStats,
+    llm.Similarity,
+    multimodal.Media)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    pipeline.Gold.queries ++
-      pipeline.Views.queries ++
-      pipeline.SilverJson.queries ++
-      sources.AvroBronze.queries ++
-      sources.CsvBronze.queries ++
-      sources.XmlBronze.queries ++
-      sources.JsonLake.queries ++
-      sources.OrcLake.queries ++
-      sources.v2.Synth.queries ++
-      sources.v2.LineSink.queries ++
-      star.Joins.queries ++
-      star.Salting.queries ++
-      star.Windows.queries ++
-      star.Aggs.queries ++
-      star.SetOps.queries ++
-      star.Extended.queries ++
-      star.EventWindows.queries ++
-      star.Warehouse.queries ++
-      star.Calendar.queries ++
-      star.SqlFeatures.queries ++
-      star.ZOrder.queries ++
-      star.Tpch.queries ++
-      star.Inference.queries ++
-      star.Linkage.queries ++
-      star.Attribution.queries ++
-      llm.Dedup.queries ++
-      llm.Curate.queries ++
-      llm.Cluster.queries ++
-      llm.Search.queries ++
-      llm.TextStats.queries ++
-      llm.Similarity.queries ++
-      multimodal.Media.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    pipeline.Gold.oracles ++
-      pipeline.Views.oracles ++
-      pipeline.SilverJson.oracles ++
-      sources.AvroBronze.oracles ++
-      sources.CsvBronze.oracles ++
-      sources.XmlBronze.oracles ++
-      sources.JsonLake.oracles ++
-      sources.OrcLake.oracles ++
-      sources.v2.Synth.oracles ++
-      sources.v2.LineSink.oracles ++
-      star.Joins.oracles ++
-      star.Salting.oracles ++
-      star.Windows.oracles ++
-      star.Aggs.oracles ++
-      star.SetOps.oracles ++
-      star.Extended.oracles ++
-      star.EventWindows.oracles ++
-      star.Warehouse.oracles ++
-      star.Calendar.oracles ++
-      star.SqlFeatures.oracles ++
-      star.ZOrder.oracles ++
-      star.Tpch.oracles ++
-      star.Inference.oracles ++
-      star.Linkage.oracles ++
-      star.Attribution.oracles ++
-      llm.Dedup.oracles ++
-      llm.Curate.oracles ++
-      llm.Cluster.oracles ++
-      llm.Search.oracles ++
-      llm.TextStats.oracles ++
-      llm.Similarity.oracles ++
-      multimodal.Media.oracles
+  lazy val oracleSql: Map[String, String] = modules.flatMap(_.oracles).toMap
+}
+
+/** A module that registers queries: its operators by name, and the DuckDB
+  * oracle SQL of those that have one. */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
 }

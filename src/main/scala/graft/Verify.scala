@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,20 +7,8 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // dev-only: optional query-name filter (driver always passes 2 args)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      // r15: same planner config as Bench, so the verified plans ARE
-      // the benched plans (shuffled-hash join allowed where its size
-      // conditions hold — guide §3.1).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session, so the verified plans ARE the benched plans
+    val spark = Bench.session(Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
     Det.silenceBenignWindowWarning()
     new java.io.File(outDir).mkdirs()

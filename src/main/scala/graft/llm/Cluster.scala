@@ -30,10 +30,10 @@ import graft.Det.sqlOrderBy
   * localCheckpoint'd to truncate lineage, without which the plan tree
   * doubles per iteration.
   */
-object Cluster {
+object Cluster extends graft.QueryModule {
 
   /** Undirected view of a directed edge list (src, dst). */
-  private[graft] def bothDirs(e: DataFrame): DataFrame =
+  private def bothDirs(e: DataFrame): DataFrame =
     e.select(col("src"), col("dst"))
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
 
@@ -43,7 +43,7 @@ object Cluster {
       .select(col("src"), least(col("mn"), col("src")).as("m"))
 
   /** Large-star: connect every strictly-larger neighbor of u to m(u). */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
+  private def largeStar(e: DataFrame): DataFrame = {
     val nbrs = bothDirs(e)
     nbrs.join(minNbr(nbrs), "src")
       .where(col("dst") > col("src"))
@@ -53,7 +53,7 @@ object Cluster {
   }
 
   /** Small-star: connect u and every smaller neighbor of u to m(u). */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
+  private def smallStar(e: DataFrame): DataFrame = {
     val nbrs = bothDirs(e)
     val nPlus = nbrs.where(col("dst") < col("src"))
       .union(nbrs.select(col("src")).distinct()

@@ -28,7 +28,7 @@ import graft.Det.sqlOrderBy
   * single-stage formulation so the distributed decomposition is proved,
   * not assumed.
   */
-object Curate {
+object Curate extends graft.QueryModule {
 
   /** Max documents kept per source ([[sourceCap]]). */
   private val Cap = 15

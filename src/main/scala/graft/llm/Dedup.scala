@@ -21,7 +21,7 @@ import graft.Det.sqlOrderBy
   * SimHash: 16-bit majority-vote fingerprint over per-word 32-bit
   * hashes, again fully inside array expressions (filter+size per bit).
   */
-object Dedup {
+object Dedup extends graft.QueryModule {
 
   /** Exact dedup: content-hash group, keeper = min doc_id. */
   def exact(spark: SparkSession, dir: String): DataFrame = {

@@ -26,7 +26,7 @@ import graft.Tables
   * global sort. At 100 TB: scan-speed map + a 1-row exchange + k rows
   * to the driver.
   */
-object Search {
+object Search extends graft.QueryModule {
 
   private val terms = Seq("query", "join", "vector")
 

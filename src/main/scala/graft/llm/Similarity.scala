@@ -27,7 +27,7 @@ import graft.Det.sqlOrderBy
   * files can be pruned by a `label` partition column at the storage
   * layer.
   */
-object Similarity {
+object Similarity extends graft.QueryModule {
 
   /** Spark SQL expr: fixed-point (scale 14) exact dot product of two
     * array columns — the native codegen'd expression
@@ -2282,7 +2282,7 @@ object Similarity {
     val modelPath = s"$root/model"
     if (!new java.io.File(s"$modelPath/_SUCCESS").exists())
       autoKCentroids(spark, dir).write.mode("overwrite").parquet(modelPath)
-    val model = spark.read.parquet(modelPath)
+    val model = graft.ParquetRead(spark, modelPath)
     def derive(src: DataFrame): DataFrame =
       assignToCells(spark, src, model)
         .join(src.select($"vec_id", $"label"), "vec_id")

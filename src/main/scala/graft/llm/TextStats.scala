@@ -14,7 +14,7 @@ import graft.Det.sqlOrderBy
   * Every metric is integer/array arithmetic + one final double division,
   * so Spark and DuckDB produce bit-identical outputs.
   */
-object TextStats {
+object TextStats extends graft.QueryModule {
 
   private val stopwords = Seq("the", "a", "value", "data")
   private def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("(", ", ", ")")

@@ -37,7 +37,7 @@ import graft.Det.sqlOrderBy
   * repartition on a content-hash key is available for pathological file
   * size mixes.
   */
-object Media {
+object Media extends graft.QueryModule {
 
   /** One media object: opaque bytes + source metadata. */
   case class MediaFile(doc_id: Long, media_type: String, content: Array[Byte])
@@ -176,11 +176,19 @@ object Media {
     root
   }
 
+  /** A media lake written by [[writeImages]], [[writeGifs]] or
+    * [[writeWavs]], read with its schema resolved on the driver
+    * (`graft.ParquetRead`: no schema-inference job per read). */
+  private def mediaLake(spark: SparkSession, path: String): Dataset[MediaFile] = {
+    import spark.implicits._
+    graft.ParquetRead(spark, path).as[MediaFile]
+  }
+
   /** The batched decode stage: `mapPartitions` over the encoded-image
     * lake (encode amortized by the fixture cache). */
   def decode(spark: SparkSession, dir: String): Dataset[MediaFeatures] = {
     import spark.implicits._
-    spark.read.parquet(writeImages(spark, dir)).as[MediaFile]
+    mediaLake(spark, writeImages(spark, dir))
       .mapPartitions(decodeBatch)
   }
 
@@ -287,7 +295,7 @@ object Media {
     * and `getNumImages(true)` walks the container's frame blocks. */
   def gifDecode(spark: SparkSession, dir: String): Dataset[MediaFeatures] = {
     import spark.implicits._
-    spark.read.parquet(writeGifs(spark, dir)).as[MediaFile]
+    mediaLake(spark, writeGifs(spark, dir))
       .mapPartitions(decodeBatch)
   }
 
@@ -568,7 +576,7 @@ object Media {
     * destroy; measured decode-only 0.18 s vs decode+sort 1.32 s). */
   private[graft] def phashFeats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(writeImages(spark, dir)).as[MediaFile]
+    mediaLake(spark, writeImages(spark, dir))
       .mapPartitions(hashBatch)
       .toDF()
   }
@@ -971,7 +979,7 @@ object Media {
 
   def wavDecode(spark: SparkSession, dir: String): Dataset[WavFeatures] = {
     import spark.implicits._
-    spark.read.parquet(writeWavs(spark, dir)).as[MediaFile]
+    mediaLake(spark, writeWavs(spark, dir))
       .mapPartitions(wavDecodeBatch)
   }
 
@@ -1051,7 +1059,7 @@ object Media {
     * Map-only `mapPartitions`; no shuffle at any scale. */
   def wavResampleQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feats = spark.read.parquet(writeWavs(spark, dir)).as[MediaFile]
+    val feats = mediaLake(spark, writeWavs(spark, dir))
       .mapPartitions { batch =>
         batch.map { m =>
           // decode pass 1
@@ -1161,7 +1169,7 @@ object Media {
     * constant work per clip, no shuffle before the harness order. */
   def wavHaarQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feats = spark.read.parquet(writeWavs(spark, dir)).as[MediaFile]
+    val feats = mediaLake(spark, writeWavs(spark, dir))
       .mapPartitions { batch =>
         batch.map { m =>
           val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
@@ -1286,7 +1294,7 @@ object Media {
     * `dq_lsh_preflight` audio band family. */
   private[graft] def wavFps(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(writeWavs(spark, dir)).as[MediaFile]
+    mediaLake(spark, writeWavs(spark, dir))
       .mapPartitions(wavFpBatch).toDF()
   }
 
@@ -1385,7 +1393,7 @@ object Media {
     import spark.implicits._
     val root = mediaIndexRoot("phash", dir)
     graft.sources.Incremental.serve(spark,
-      bucketed(spark.read.parquet(writeImages(spark, dir))), "bucket",
+      bucketed(mediaLake(spark, writeImages(spark, dir)).toDF()), "bucket",
       phashDerive, root)
       .select($"doc_id", $"phash_hi", $"phash_lo")
   }
@@ -1403,7 +1411,7 @@ object Media {
     import spark.implicits._
     val root = mediaIndexRoot("wavfp", dir)
     graft.sources.Incremental.serve(spark,
-      bucketed(spark.read.parquet(writeWavs(spark, dir))), "bucket",
+      bucketed(mediaLake(spark, writeWavs(spark, dir)).toDF()), "bucket",
       wavDerive, root)
       .select($"doc_id", $"fp")
   }
@@ -1636,7 +1644,7 @@ object Media {
     * size per image, no shuffle before the harness order. */
   def resizeQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feats = spark.read.parquet(writeImages(spark, dir)).as[MediaFile]
+    val feats = mediaLake(spark, writeImages(spark, dir))
       .mapPartitions { batch =>
         imageIoNoDiskCache
         batch.map { m =>
@@ -1736,7 +1744,7 @@ object Media {
     * stage is the scan; nothing downstream grows with pixel count. */
   def channelStatsQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val moments = spark.read.parquet(writeImages(spark, dir)).as[MediaFile]
+    val moments = mediaLake(spark, writeImages(spark, dir))
       .mapPartitions { batch =>
         imageIoNoDiskCache
         batch.map { m =>
@@ -1854,7 +1862,7 @@ object Media {
   def imageEntropy(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val q = graft.llm.Curate.qlog2Spark _
-    val hist = spark.read.parquet(writeImages(spark, dir)).as[MediaFile]
+    val hist = mediaLake(spark, writeImages(spark, dir))
       .mapPartitions { batch =>
         imageIoNoDiskCache
         batch.flatMap { m =>

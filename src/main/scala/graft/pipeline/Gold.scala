@@ -23,7 +23,7 @@ import graft.Det.{sqlSum, sqlAvg, sqlNullRatio, sqlOrderBy}
   * queries are bandwidth-bound on the scan, which Catalyst prunes to the
   * referenced columns only.
   */
-object Gold {
+object Gold extends graft.QueryModule {
 
   private val causes =
     Seq("carrier_ct", "weather_ct", "nas_ct", "security_ct", "late_aircraft_ct")

@@ -30,7 +30,7 @@ import graft.functions.DecodeTrimJson
   * native expression, not a UDF), so it streams at scan speed on any
   * number of executors.
   */
-object SilverJson {
+object SilverJson extends graft.QueryModule {
 
   /** Parse schema: explicit, all strings (two-phase typing, ipynb:1171). */
   val payloadSchema: StructType = StructType(Seq(

@@ -18,7 +18,7 @@ import graft.Det.{sqlSum, sqlZeroRatio, sqlOrderBy}
   * driver merges |partitions| x k rows, so top-k never global-sorts at
   * 100 TB.
   */
-object Views {
+object Views extends graft.QueryModule {
 
   /** v_overall_kpis (nb:433-446): single-row global KPI aggregate with
     * the reference's CASE-WHEN-zero division guards. */

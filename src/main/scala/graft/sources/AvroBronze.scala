@@ -25,7 +25,7 @@ import graft.pipeline.SilverJson
   * list cost is bounded by directory pruning. The silver transform
   * stays a narrow codegen'd map (see SilverJson).
   */
-object AvroBronze {
+object AvroBronze extends graft.QueryModule {
 
   /** This Spark build bundles the Avro `FileFormat` inside spark-sql
     * but omits it from the `DataSourceRegister` service file, so the

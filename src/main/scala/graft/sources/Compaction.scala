@@ -33,7 +33,7 @@ object Compaction {
     val before = fileCount(dir)
     val n = math.max(1, math.ceil(dirBytes(dir).toDouble / targetBytes).toInt)
     val staged = dir + ".compact"
-    spark.read.parquet(dir).repartition(n)
+    graft.ParquetRead(spark, dir).repartition(n)
       .write.mode("overwrite").parquet(staged)
     val live = new java.io.File(dir)
     val old = new java.io.File(dir + ".old")

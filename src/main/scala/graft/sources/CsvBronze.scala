@@ -31,7 +31,7 @@ import graft.pipeline.FlightPipeline
   * input TWICE at 100 TB), and the cast chain is a narrow codegen'd
   * map — no shuffle until the harness-only total-order tail.
   */
-object CsvBronze {
+object CsvBronze extends graft.QueryModule {
 
   /** All-string read schema — the DictReader contract: no inference,
     * no type opinions at the ingestion boundary. */

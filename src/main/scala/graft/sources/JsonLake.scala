@@ -22,7 +22,7 @@ import graft.Det.sqlOrderBy
   * audit is a |langs|-row aggregate. Nothing here is harder at 100 TB
   * than the scan itself.
   */
-object JsonLake {
+object JsonLake extends graft.QueryModule {
 
   private def lakeRoot(dir: String): String =
     s"target/json_lake/${new java.io.File(dir).getName}"

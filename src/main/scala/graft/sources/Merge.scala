@@ -88,7 +88,7 @@ object Merge {
   def deleteKeys(spark: SparkSession, path: String, partCol: String,
       keyCol: String, keys: Seq[Any],
       maxParts: Int = Incremental.MaxDriverParts): Seq[String] = {
-    val target = spark.read.parquet(path)
+    val target = graft.ParquetRead(spark, path)
     // hit partitions stay a DataFrame for the data path (broadcast
     // semi-join); driver only ever sees the bounded NAME list it needs
     // for the filesystem deletes below. `keys` itself is caller-provided

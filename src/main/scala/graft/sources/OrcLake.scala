@@ -23,7 +23,7 @@ import graft.Det.{sqlSum, sqlOrderBy}
   * residual filter into the ORC reader. ORC stripes are splittable, so
   * the scan parallelizes exactly like parquet at any size.
   */
-object OrcLake {
+object OrcLake extends graft.QueryModule {
 
   /** Deterministic subset keeps the fixture write cheap. */
   private val subset = "l_orderkey % 4 = 0"

@@ -134,7 +134,7 @@ object Versioned {
     }
     if (!overwriteSchema) {
       cur0.foreach { cur =>
-        val existing = df.sparkSession.read.parquet(dataDir(root, cur)).schema
+        val existing = graft.ParquetRead(df.sparkSession, dataDir(root, cur)).schema
         // compare (name, type) shape only: parquet read-back is always
         // nullable, so strict StructType equality would reject every
         // in-memory frame with non-null columns
@@ -178,7 +178,7 @@ object Versioned {
       asOf: Option[Long] = None): DataFrame = {
     val v = asOf.orElse(latestVersion(root))
       .getOrElse(throw new IllegalStateException(s"no versions at $root"))
-    spark.read.parquet(dataDir(root, v))
+    graft.ParquetRead(spark, dataDir(root, v))
   }
 
   /** Expire history: physically delete data directories referenced only

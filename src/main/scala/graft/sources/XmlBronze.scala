@@ -41,7 +41,7 @@ import graft.pipeline.FlightPipeline
   * narrow codegen'd map with no shuffle until the harness-only ordered
   * tail.
   */
-object XmlBronze {
+object XmlBronze extends graft.QueryModule {
 
   /** All-string read schema — same no-inference contract as
     * [[CsvBronze.readSchema]]. */

@@ -46,7 +46,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * source, parse, and aggregate per region — while DuckDB computes the
   * same aggregate from the parquet directly. A hash match proves the
   * write path is LOSSLESS end to end, not just protocol-correct. */
-object LineSink {
+object LineSink extends graft.QueryModule {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
 
@@ -94,7 +94,7 @@ object LineSink {
         "UTF-8") == fp
     if (!cached) {
       graft.Fs.deleteTree(java.nio.file.Paths.get(root))
-      spark.read.parquet(s"$dir/nation.parquet")
+      graft.ParquetRead(spark, s"$dir/nation.parquet")
         .select(col("n_nationkey").cast("long").as("k"),
           col("n_name"), col("n_regionkey").cast("long").as("rk"))
         .repartition(3)

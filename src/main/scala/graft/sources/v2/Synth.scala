@@ -11,7 +11,7 @@ import graft.Det.sqlOrderBy
   * [[SyntheticTable]]), so the connector's generation, pushdown, and
   * pruning paths are all inside the hash-checked loop, not just
   * unit-tested. */
-object Synth {
+object Synth extends graft.QueryModule {
 
   /** Aggregate through the connector with an id-range filter that the
     * source prunes at partition-planning time (asserted in

@@ -17,7 +17,7 @@ import graft.Det.{sqlSum, sqlOrderBy}
   * count-distinct shuffles every key. Top-k compiles to
   * TakeOrderedAndProject (per-partition heaps, no global sort).
   */
-object Aggs {
+object Aggs extends graft.QueryModule {
 
   /** ROLLUP (year, month): per-month, per-year subtotals + grand total. */
   def rollup(spark: SparkSession, dir: String): DataFrame = {

@@ -23,7 +23,7 @@ import graft.Det.sqlOrderBy
   * divisions, factorial-weighted BIGINT Shapley numerators); each
   * output double is one terminal division of exactly-agreed integers.
   */
-object Attribution {
+object Attribution extends graft.QueryModule {
 
   /** events_shapley_attrib: exact Shapley-value channel attribution.
     * Channels are the non-purchase event types (bit = alphabetic

@@ -14,7 +14,7 @@ import graft.Det.{sqlOrderBy, sqlSum}
   * |days| or |months| rows at ANY fact-table scale — generation cost
   * is independent of data volume.
   */
-object Calendar {
+object Calendar extends graft.QueryModule {
 
   /** Date dimension spanning the fact table's order-date range:
     * ISO weekday arithmetic (Monday = 0) keeps both engines on the

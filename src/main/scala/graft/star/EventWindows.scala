@@ -19,7 +19,7 @@ import graft.Det.{sqlSum, sqlOrderBy}
   * is exactly len/slide rows per event (2x here), expanded *before*
   * partial aggregation so the shuffle carries window aggregates.
   */
-object EventWindows {
+object EventWindows extends graft.QueryModule {
 
   /** 30-minute-gap sessions per user: native session_window. */
   def sessionize(spark: SparkSession, dir: String): DataFrame = {

@@ -11,7 +11,7 @@ import graft.pipeline.FlightPipeline
   * Aggregator in a real grouped query, and an explode-based generator
   * query — both oracle-checked.
   */
-object Extended {
+object Extended extends graft.QueryModule {
 
   /** Weighted delay rate per carrier via the custom Aggregator — the
     * UDAF result must equal the relational sum/sum form (that is

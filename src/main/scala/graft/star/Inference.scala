@@ -21,7 +21,7 @@ import graft.Det.sqlOrderBy
   * single terminal division of exactly-agreed integers — bit-identical
   * across engines and across any parallelism.
   */
-object Inference {
+object Inference extends graft.QueryModule {
 
   /** stat_conformal: split conformal prediction intervals per order
     * priority — the distribution-free coverage guarantee (P(y ∈ Ĉ(x))

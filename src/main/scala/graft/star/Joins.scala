@@ -23,7 +23,7 @@ import graft.Det.{sqlSum, sqlOrderBy}
   *    `last(_, ignoreNulls)` — the standard streaming-friendly as-of
   *    formulation (no Spark built-in exists).
   */
-object Joins {
+object Joins extends graft.QueryModule {
 
   /** J1: 3-way equi inner join + aggregate — revenue per
     * (market segment, order priority). */

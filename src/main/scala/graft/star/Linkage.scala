@@ -36,7 +36,7 @@ import graft.Det.sqlOrderBy
   * rows; u-estimation is the same single aggregate; entity grouping is
   * the O(log n) large/small-star contraction from [[graft.llm.Cluster]].
   */
-object Linkage {
+object Linkage extends graft.QueryModule {
 
   /** Blocked comparison vectors: one row per within-brand candidate
     * pair with the three agreement flags. */

@@ -17,7 +17,7 @@ import graft.Det.{sqlSum, sqlOrderBy}
   * nondeterministic per-row salt is safe here (and retry-safe: a
   * re-computed task re-salts its rows, joining identically).
   */
-object Salting {
+object Salting extends graft.QueryModule {
 
   def saltedEquiJoin(probe: DataFrame, build: DataFrame,
       probeKey: String, buildKey: String, salts: Int): DataFrame = {

@@ -12,7 +12,7 @@ import graft.Det.sqlOrderBy
   * hash-join plans on the compared columns; the inputs here are already
   * distinct key projections, so the shuffle carries only keys.
   */
-object SetOps {
+object SetOps extends graft.QueryModule {
 
   private def buyers(spark: SparkSession, dir: String, yr: Int): DataFrame = {
     import spark.implicits._

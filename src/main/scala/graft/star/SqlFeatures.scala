@@ -23,7 +23,7 @@ import graft.Det.sqlSum
   *    daily grid (bounded at |event types| x |days|), not raw events —
   *    the only formulation that survives unbounded event volume.
   */
-object SqlFeatures {
+object SqlFeatures extends graft.QueryModule {
 
   private def view(spark: SparkSession, dir: String, t: String): Unit =
     Tables(spark, dir, t).createOrReplaceTempView(t)

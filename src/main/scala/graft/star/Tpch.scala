@@ -30,7 +30,7 @@ import graft.Det.{sqlOrderBy, sqlSum}
   * table family in SourcesSpec), so at 100 TB it reads row groups that
   * min/max-match the predicate window and nothing else.
   */
-object Tpch {
+object Tpch extends graft.QueryModule {
 
   /** Q1: pricing summary report over lineitems shipped by 1998-09-02. */
   def q1(spark: SparkSession, dir: String): DataFrame = {

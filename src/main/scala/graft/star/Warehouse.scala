@@ -31,7 +31,7 @@ import graft.Det.sqlOrderBy
   *    cents arithmetic, so no variance/stddev floating-point divergence
   *    can flip a row between engines (z² in squared form — sqrt-free).
   */
-object Warehouse {
+object Warehouse extends graft.QueryModule {
 
   /** Daily purchase-cohort retention: users bucketed by the day of
     * their first purchase; a cohort cell counts the distinct users of

@@ -21,7 +21,7 @@ import graft.Det.{sqlSum, sqlOrderBy}
   * |months| — bounded and tiny relative to data, and the input to those
   * is already a pre-aggregated ~|months|-row frame, not raw rows.
   */
-object Windows {
+object Windows extends graft.QueryModule {
 
   /** row_number / rank / dense_rank: top-3 orders by value per market
     * segment. */

@@ -24,7 +24,7 @@ import graft.Det.sqlOrderBy
   * actual re-layout would `repartitionByRange(zval)` + write — the
   * sort cost is the one-off clustering price, after which every
   * 2-D-selective scan prunes. */
-object ZOrder {
+object ZOrder extends graft.QueryModule {
 
   /** Unrolled 16-bit × 2 Morton interleave. `shl(e, n)` is the
     * engine's shift-left syntax; the arithmetic is identical. */

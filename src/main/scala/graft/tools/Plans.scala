@@ -1,12 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Dev tool: regenerate PLANS.md — `explain("formatted")` output for
-  * the headline queries, committed so plan regressions are visible in
-  * review diffs (the judge-readable companion to PlanSpec's hard
-  * gates). Run at sf0.001 (plan SHAPE is what matters; AQE re-plans at
-  * runtime are gated separately in AqeSpec). */
+/** Dev tool: `explain("formatted")` output of registered queries under
+  * Bench's session.
+  *
+  *   runMain graft.tools.Plans                        # rewrites PLANS.md
+  *   runMain graft.tools.Plans <outDir> <query>...    # <outDir>/<query>.txt
+  *
+  * With no arguments it regenerates PLANS.md for the headline queries,
+  * committed so plan regressions are visible in review diffs (the
+  * readable companion to PlanSpec's hard gates). With a directory and
+  * query names it writes one file per query there, the before/after
+  * evidence of an optimization, and leaves PLANS.md alone. Plans are
+  * taken at SPARK_GRAFT_SF_DIR, default sf0.001 (plan SHAPE is what
+  * matters; AQE re-plans at runtime are gated separately in AqeSpec). */
 object Plans {
 
   private val headline = Seq(
@@ -50,29 +58,32 @@ object Plans {
     "gold_carrier")         // incremental-served gold: manifest-resolved read
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val spark = graft.Bench.session(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     graft.Det.silenceBenignWindowWarning()
-    val sections = headline.map { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      s"## `$name`\n\n```\n${plan.trim}\n```\n"
+    def plan(name: String): String =
+      graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode).trim
+    if (args.isEmpty) {
+      val sections = headline.map { name =>
+        s"## `$name`\n\n```\n${plan(name)}\n```\n"
+      }
+      val md = ("# PLANS — formatted physical plans of the headline queries " +
+        "(generated by `graft.tools.Plans`)\n\n" +
+        "Shape-level audit trail: regenerate after plan-affecting changes; " +
+        "hard assertions live in `PlanSpec`/`AqeSpec`.\n\n") +
+        sections.mkString("\n")
+      Files.write(Paths.get("PLANS.md"), md.getBytes("UTF-8"))
+      println(s"PLANS.md: ${headline.size} plans")
+    } else {
+      val outDir = Files.createDirectories(Paths.get(args(0)))
+      args.drop(1).foreach { name =>
+        val f = outDir.resolve(s"$name.txt")
+        Files.write(f, (plan(name) + "\n").getBytes("UTF-8"))
+        println(f)
+      }
     }
-    val md = ("# PLANS — formatted physical plans of the headline queries " +
-      "(generated by `graft.tools.Plans`)\n\n" +
-      "Shape-level audit trail: regenerate after plan-affecting changes; " +
-      "hard assertions live in `PlanSpec`/`AqeSpec`.\n\n") +
-      sections.mkString("\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
-      md.getBytes("UTF-8"))
-    println(s"PLANS.md: ${headline.size} plans")
     spark.stop()
   }
 }

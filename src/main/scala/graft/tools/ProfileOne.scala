@@ -1,39 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev utility: run one registered query N times, print per-run seconds
-  * and the formatted physical plan. */
+/** Dev utility: run one registered query N times under Bench's session
+  * and print per-run seconds. Each run materializes the full rows
+  * through the `noop` sink, as Bench does; `graft.tools.Plans` dumps
+  * the plan. Usage: `runMain graft.tools.ProfileOne <query> [sfDir] [n]`. */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SHJ=1 mirrors the Bench/Verify r15 planner config so A/B runs
-      // under the same methodology isolate exactly that conf pair
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.contains("SHJ_OFF").toString)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        if (sys.env.contains("SHJ_OFF")) "0" else "128m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(name)
-    if (sys.env.contains("EXPLAIN")) fn(spark, sfDir).explain("formatted")
     for (i <- 1 to n) {
       spark.catalog.clearCache() // no cross-run reuse of persist()ed plans
       val t0 = System.nanoTime()
-      // PROFILE_COUNT=1 measures the ScaleRehearsal stage() methodology
-      // (count() — lets Catalyst prune unconsumed columns) instead of
-      // the bench's full-row-production noop write
-      if (sys.env.contains("PROFILE_COUNT")) fn(spark, sfDir).count()
-      else fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"== run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     spark.stop()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-off sf1 scale rehearsal (dev tool, not part of the gated bench):
@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * Results land in SCALE.md.
   *
   * Amplification happens in `target/rehearsal` — the driver's testdata
-  * tree is never touched.
+  * tree is never touched. Runs under Bench's session at
+  * `SPARK_GRAFT_CPUS` slots (SCALE.md's rehearsals ran at 32).
   */
 object ScaleRehearsal {
 
@@ -38,13 +39,7 @@ object ScaleRehearsal {
     // operator's growth row doesn't require re-running the whole chain
     val onlyStages = args.lift(2).map(_.split(",").toSet)
     val dir = "target/rehearsal"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Bench.session(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
