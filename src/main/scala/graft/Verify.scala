@@ -12,21 +12,9 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     Det.silenceBenignWindowWarning()
     new java.io.File(outDir).mkdirs()
-    // HERMETIC correctness (round 15): every derived on-disk tier —
-    // the graft_*_cache materializations and the fingerprint-gated
-    // media lakes — is rebuilt from the source lake within THIS run,
-    // so builder-side cache state can never surface as an oracle
-    // mismatch (the r14 adjudication's alternative cause for the two
-    // reds). One-time rebuild cost at the verify SF; the serve-path
-    // economics are Bench's concern, and its warm passes keep them.
-    val t = new java.io.File("target")
-    Option(t.listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        val n = f.getName
-        (n.startsWith("graft_") && n.endsWith("_cache")) ||
-          n.startsWith("media_")
-      }
-      .foreach(f => Fs.deleteTree(f.toPath))
+    // hermetic: every derived tier is rebuilt from the source lake in
+    // this run, so cache state can never surface as an oracle mismatch
+    Workspace.reset()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

@@ -102,21 +102,6 @@ object Dedup extends graft.QueryModule {
     * on-disk index (the algo-version half of the cache key). */
   val SigIndexVersion: Int = 1
 
-  /** r12 minted one index root per full-corpus fingerprint (`fp=*`);
-    * under the r13 keying those are dead weight — list them for the
-    * one-time sweep in [[lshIndexed]]. */
-  private def legacyFpRoots(root: String): Seq[java.io.File] = {
-    val d = new java.io.File(root)
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toSeq.filter(f =>
-      f.isDirectory && f.getName.startsWith("fp="))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** dedup_lsh_indexed: the DAILY-DELTA dedup workflow, served FROM
     * the partition-incrementally materialized signature index — the
     * text twin of `embed_ivf_topk_indexed`: new documents (the
@@ -153,14 +138,8 @@ object Dedup extends graft.QueryModule {
     // cache root = (algo version, source dir) ONLY: per-partition
     // staleness belongs to refresh's manifest fingerprints, and a
     // corpus change must cost |changed partitions|, never a new root
-    val root = new java.io.File(
-      s"target/graft_sig_cache/v$SigIndexVersion/" +
-        java.net.URLEncoder.encode(dir, "UTF-8")).getAbsolutePath
-    // one-time sweep of r12's fingerprint-keyed roots (fp=*): they are
-    // unreachable generations under the new keying — delete, don't leak
-    legacyFpRoots(root).foreach(deleteRecursively)
     graft.sources.Incremental.serve(spark, docs, "source", sigOf,
-      s"$root/index")
+      graft.Workspace.cache("sig", SigIndexVersion, dir) + "/index")
   }
 
   def lshIndexed(spark: SparkSession, dir: String): DataFrame = {

@@ -458,11 +458,9 @@ object Similarity extends graft.QueryModule {
     * IVF-index discipline) — the artifact the round-14 gate prices the
     * embed family from without re-projecting the corpus. */
   private[graft] def srpIndex(spark: SparkSession, dir: String): DataFrame = {
-    val root = new java.io.File(
-      "target/graft_srp_cache/v1/" +
-        java.net.URLEncoder.encode(dir, "UTF-8")).getAbsolutePath + "/index"
     graft.sources.Incremental.serve(spark,
-      Tables(spark, dir, "embeddings"), "label", srpSig, root)
+      Tables(spark, dir, "embeddings"), "label", srpSig,
+      graft.Workspace.cache("srp", 1, dir) + "/index")
       .select(col("vec_id"), col("band_a"), col("band_b"))
   }
 
@@ -2238,7 +2236,7 @@ object Similarity extends graft.QueryModule {
     * keyed by this + the corpus fingerprint, so an algorithm change
     * invalidates stale indexes instead of serving answers the current
     * oracle can no longer reproduce. */
-  private val IvfIndexVersion = 3
+  private[graft] val IvfIndexVersion = 3
 
   /** embed_ivf_topk_indexed: batch ANN top-3 served FROM the
     * partition-incrementally materialized IVF index — the registered,
@@ -2276,9 +2274,7 @@ object Similarity extends graft.QueryModule {
           count(lit(1)).as("n")).head()
         java.lang.Long.toHexString(fpRow.getLong(0)) + "_" + fpRow.getLong(1)
       }
-    val root = new java.io.File(
-      s"target/graft_ivf_cache/v$IvfIndexVersion/" +
-        java.net.URLEncoder.encode(dir, "UTF-8") + s"/fp=$fp").getAbsolutePath
+    val root = graft.Workspace.cache("ivf", IvfIndexVersion, dir) + s"/fp=$fp"
     val modelPath = s"$root/model"
     if (!new java.io.File(s"$modelPath/_SUCCESS").exists())
       autoKCentroids(spark, dir).write.mode("overwrite").parquet(modelPath)

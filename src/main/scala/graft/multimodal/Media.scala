@@ -153,28 +153,14 @@ object Media extends graft.QueryModule {
     }
   }
 
-  /** Fixture root for the encoded-image "media lake", keyed by scale
-    * dir name. */
-  def imageRoot(dir: String): String =
-    s"target/media_images/${new java.io.File(dir).getName}"
-
   /** Materialize [[imageTable]] as a binary-column parquet lake —
-    * content-fingerprint-cached like AvroBronze, so repeat runs pay the
+    * behind the `graft.Workspace.fixture` gate, so repeat runs pay the
     * PNG/BMP encode once. This is also the honest 100 TB shape: decode
     * consumes a columnar scan of (id, type, payload BINARY) rows, which
     * is what a `binaryFile` ingest of a real media lake produces. */
-  def writeImages(spark: SparkSession, dir: String): String = {
-    val root = imageRoot(dir)
-    val fp = graft.sources.AvroBronze.fingerprint(dir)
-    val fpFile = new java.io.File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new java.io.File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
-      imageTable(spark, dir).write.mode("overwrite").parquet(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
-  }
+  def writeImages(spark: SparkSession, dir: String): String =
+    graft.Workspace.fixture(graft.Workspace.lake("media_images", dir), dir)(
+      imageTable(spark, dir).write.mode("overwrite").parquet(_))
 
   /** A media lake written by [[writeImages]], [[writeGifs]] or
     * [[writeWavs]], read with its schema resolved on the driver
@@ -271,24 +257,11 @@ object Media extends graft.QueryModule {
       }
   }
 
-  /** Fixture root for the animated-GIF lake, keyed by scale dir name. */
-  def gifRoot(dir: String): String =
-    s"target/media_gifs/${new java.io.File(dir).getName}"
-
   /** Materialize [[gifTable]] content-fingerprint-cached, like
     * [[writeImages]]. */
-  def writeGifs(spark: SparkSession, dir: String): String = {
-    val root = gifRoot(dir)
-    val fp = graft.sources.AvroBronze.fingerprint(dir)
-    val fpFile = new java.io.File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new java.io.File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
-      gifTable(spark, dir).write.mode("overwrite").parquet(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
-  }
+  def writeGifs(spark: SparkSession, dir: String): String =
+    graft.Workspace.fixture(graft.Workspace.lake("media_gifs", dir), dir)(
+      gifTable(spark, dir).write.mode("overwrite").parquet(_))
 
   /** Batched decode over the GIF lake — the same [[decodeBatch]]
     * kernel as [[decode]]: the reader is sniffed from the magic bytes
@@ -924,23 +897,11 @@ object Media extends graft.QueryModule {
       }
   }
 
-  def wavRoot(dir: String): String =
-    s"target/media_wavs/${new java.io.File(dir).getName}"
-
   /** Materialize [[wavTable]] as a binary-column parquet lake (same
     * fingerprint cache as the image lake). */
-  def writeWavs(spark: SparkSession, dir: String): String = {
-    val root = wavRoot(dir)
-    val fp = graft.sources.AvroBronze.fingerprint(dir)
-    val fpFile = new java.io.File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new java.io.File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
-      wavTable(spark, dir).write.mode("overwrite").parquet(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
-  }
+  def writeWavs(spark: SparkSession, dir: String): String =
+    graft.Workspace.fixture(graft.Workspace.lake("media_wavs", dir), dir)(
+      wavTable(spark, dir).write.mode("overwrite").parquet(_))
 
   /** REAL audio decode kernel — `javax.sound.sampled` (the JDK's WAV
     * SPI, the audio sibling of the imageio path): container metadata
@@ -1358,11 +1319,6 @@ object Media extends graft.QueryModule {
     * artifacts, the [[graft.llm.Dedup.SigIndexVersion]] discipline). */
   val MediaIndexVersion: Int = 1
 
-  private def mediaIndexRoot(kind: String, dir: String): String =
-    new java.io.File(
-      s"target/graft_${kind}_cache/v$MediaIndexVersion/" +
-        java.net.URLEncoder.encode(dir, "UTF-8")).getAbsolutePath + "/index"
-
   /** 16-way doc_id bucket as the refresh partition grain: the fixture
     * lakes are written flat, so the bucket stands in for the date /
     * source partitioning a production media lake carries — a corpus
@@ -1391,7 +1347,7 @@ object Media extends graft.QueryModule {
 
   private[graft] def phashIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = mediaIndexRoot("phash", dir)
+    val root = graft.Workspace.cache("phash", MediaIndexVersion, dir) + "/index"
     graft.sources.Incremental.serve(spark,
       bucketed(mediaLake(spark, writeImages(spark, dir)).toDF()), "bucket",
       phashDerive, root)
@@ -1409,7 +1365,7 @@ object Media extends graft.QueryModule {
 
   private[graft] def wavIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = mediaIndexRoot("wavfp", dir)
+    val root = graft.Workspace.cache("wavfp", MediaIndexVersion, dir) + "/index"
     graft.sources.Incremental.serve(spark,
       bucketed(mediaLake(spark, writeWavs(spark, dir)).toDF()), "bucket",
       wavDerive, root)

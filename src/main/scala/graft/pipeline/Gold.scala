@@ -66,11 +66,9 @@ object Gold extends graft.QueryModule {
     * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). */
   private def servedGold(spark: SparkSession, dir: String, name: String,
       build: DataFrame => DataFrame): DataFrame = {
-    val root = new java.io.File(
-      "target/graft_gold_cache/v1/" +
-        java.net.URLEncoder.encode(dir, "UTF-8") + s"/$name").getAbsolutePath
     graft.sources.Incremental.serve(spark,
-      FlightPipeline.master(spark, dir), "year_month", build, root)
+      FlightPipeline.master(spark, dir), "year_month", build,
+      graft.Workspace.cache("gold", 1, dir) + s"/$name")
       .coalesce(1)
   }
 

@@ -46,42 +46,15 @@ object AvroBronze extends graft.QueryModule {
       "Body BINARY, SequenceNumber BIGINT, EnqueuedTimeUtc STRING, " +
         "Properties MAP<STRING,STRING>, SystemProperties MAP<STRING,STRING>")
 
-  /** Fixture root inside the build dir, keyed by scale factor. */
-  def captureRoot(dir: String): String =
-    s"target/avro_bronze/${new java.io.File(dir).getName}"
-
   /** Write the bronze envelope as Avro capture files in a 6-level
-    * date-derived directory tree. */
+    * date-derived directory tree, in the workspace keyed by scale factor. */
   def writeCapture(spark: SparkSession, dir: String): String =
-    writeCapture(spark, dir, captureRoot(dir))
+    writeCapture(spark, dir, graft.Workspace.lake("avro_bronze", dir))
 
-  /** Content fingerprint of the source scale dir (file names + sizes +
-    * mtimes of every parquet input). The fixture cache below is keyed on
-    * it, NOT just on the dir NAME: if the harness regenerates the test
-    * data under the same path, a name-keyed cache would silently run the
-    * avro query against the stale tree while the DuckDB oracle reads the
-    * new data — a baffling mismatch (or worse, a stale pass). */
-  private[graft] def fingerprint(dir: String): String = {
-    val entries = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
-  def writeCapture(spark: SparkSession, dir: String, root: String): String = {
-    // Fixture is deterministic per source-data content — reuse a
-    // completed write (_SUCCESS is committed last, so its presence = a
-    // complete tree) only when the recorded source fingerprint still
-    // matches. Without the cache the harness re-pays the fixture write
-    // per run; without the fingerprint it can reuse a stale tree.
-    val fp = fingerprint(dir)
-    val fpFile = new java.io.File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new java.io.File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
+  /** The capture tree under `root`, rewritten only when the source
+    * lake's content changed (`graft.Workspace.fixture`). */
+  def writeCapture(spark: SparkSession, dir: String, root: String): String =
+    graft.Workspace.fixture(root, dir)(
       SilverJson.bronze(spark, dir)
         .filter(captureFilter)
         // One capture window per shipdate month. Day/hour/min/sec are
@@ -101,11 +74,7 @@ object AvroBronze extends graft.QueryModule {
         .repartition(col("y"), col("mo"))
         .write.mode("overwrite")
         .partitionBy("y", "mo", "d", "h", "mi", "s")
-        .format(AvroFormat).save(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
-  }
+        .format(AvroFormat).save(_))
 
   /** S4: the real `format("avro")` scan over the 6-level glob
     * (ipynb:574-578).

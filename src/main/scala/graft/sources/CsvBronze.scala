@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -43,40 +41,30 @@ object CsvBronze extends graft.QueryModule {
     "security_ct", "late_aircraft_ct", "arr_cancelled", "arr_diverted",
     "arr_delay", "carrier_delay")
 
-  /** Fixture root: absolute so the DuckDB oracle (whose cwd is the
-    * driver's, not sbt's) globs the same files. */
-  def csvRoot: String = new File("target/csv_bronze/data").getAbsolutePath
+  /** Fixture root: absolute so the DuckDB oracle, run from another
+    * working directory, globs the same files; not keyed by scale factor
+    * (see `graft.Workspace`). */
+  def csvRoot: String = graft.Workspace.lake("csv_bronze", "data")
 
   /** Render the 17-column silver fixture as all-string CSV. Doubles go
     * through DECIMAL(18,4) so the cell bytes are identical no matter
     * which engine later parses them (raw double→string may use
     * scientific notation). Cached on a content fingerprint of the
-    * source dir — same discipline as AvroBronze: a name-keyed cache
-    * would reuse a stale tree after the harness regenerates data. */
-  def writeCsv(spark: SparkSession, dir: String): String = {
-    val root = csvRoot
-    val fp = AvroBronze.fingerprint(dir)
-    val fpFile = new File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
-      val silver = FlightPipeline.silver(spark, dir)
-      val asStrings = silver.select(FlightPipeline.silverCols.map { c =>
-        if (metricCols.contains(c))
-          col(c).cast("decimal(18,4)").cast("string").as(c)
-        else col(c).cast("string").as(c)
-      }: _*)
-      asStrings
+    * source dir (`graft.Workspace.fixture`). */
+  def writeCsv(spark: SparkSession, dir: String): String =
+    graft.Workspace.fixture(csvRoot, dir)(
+      FlightPipeline.silver(spark, dir)
+        .select(FlightPipeline.silverCols.map { c =>
+          if (metricCols.contains(c))
+            col(c).cast("decimal(18,4)").cast("string").as(c)
+          else col(c).cast("string").as(c)
+        }: _*)
         // a handful of files, not one: proves the multi-file glob path
         // both engines must handle (at 100 TB this is thousands of splits)
         .repartition(4)
         .write.mode("overwrite")
         .option("header", "true").option("delimiter", ";")
-        .csv(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
-  }
+        .csv(_))
 
   /** S1 scan: header + custom delimiter + explicit all-string schema
     * over the fixture files (no inference pass). */

@@ -24,30 +24,19 @@ import graft.Det.sqlOrderBy
   */
 object JsonLake extends graft.QueryModule {
 
-  private def lakeRoot(dir: String): String =
-    s"target/json_lake/${new java.io.File(dir).getName}"
-
   /** Write the JSONL fixture: one line per document; every 7th doc_id
     * emits a line truncated mid-object (unparseable, deterministic).
-    * Cached per source-content fingerprint like [[AvroBronze]]. */
+    * Cached per source-content fingerprint (`graft.Workspace.fixture`). */
   def writeLake(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val root = lakeRoot(dir)
-    val fp = AvroBronze.fingerprint(dir)
-    val fpFile = new java.io.File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new java.io.File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
+    graft.Workspace.fixture(graft.Workspace.lake("json_lake", dir), dir)(
       Tables(spark, dir, "documents")
         .select(
           when($"doc_id" % 7 === 0,
             concat(lit("{\"doc_id\":"), $"doc_id", lit(",\"lang\":\"tr")))
             .otherwise(to_json(struct($"doc_id", $"lang", $"n_chars")))
             .as("value"))
-        .write.mode("overwrite").text(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
+        .write.mode("overwrite").text(_))
   }
 
   /** Ingest audit: PERMISSIVE read with a corrupt-record column, then a

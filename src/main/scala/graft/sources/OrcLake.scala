@@ -28,18 +28,10 @@ object OrcLake extends graft.QueryModule {
   /** Deterministic subset keeps the fixture write cheap. */
   private val subset = "l_orderkey % 4 = 0"
 
-  def orcRoot(dir: String): String =
-    s"target/orc_lake/${new java.io.File(dir).getName}"
-
-  /** Write the ORC fixture once per source-data content (same
-    * fingerprint-keyed cache as the Avro capture tree). */
-  def writeOrc(spark: SparkSession, dir: String): String = {
-    val root = orcRoot(dir)
-    val fp = AvroBronze.fingerprint(dir)
-    val fpFile = new java.io.File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new java.io.File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
+  /** Write the ORC fixture once per source-data content
+    * (`graft.Workspace.fixture`). */
+  def writeOrc(spark: SparkSession, dir: String): String =
+    graft.Workspace.fixture(graft.Workspace.lake("orc_lake", dir), dir)(
       Tables(spark, dir, "lineitem")
         .filter(subset)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -47,11 +39,7 @@ object OrcLake extends graft.QueryModule {
           col("l_returnflag"))
         .repartition(col("l_returnflag")) // one task per partition dir
         .write.mode("overwrite").partitionBy("l_returnflag")
-        .format("orc").save(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
-  }
+        .format("orc").save(_))
 
   /** Returned-lines revenue by line status, read from the pruned ORC
     * partition. The `l_returnflag = 'R'` predicate is a partition

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -53,32 +51,20 @@ object XmlBronze extends graft.QueryModule {
     "security_ct", "late_aircraft_ct", "arr_cancelled", "arr_diverted",
     "arr_delay", "carrier_delay")
 
-  def xmlRoot: String = new File("target/xml_bronze/data").getAbsolutePath
+  /** Not keyed by scale factor (see `graft.Workspace`). */
+  def xmlRoot: String = graft.Workspace.lake("xml_bronze", "data")
 
   /** Render the silver fixture as XML, fingerprint-cached on the source
-    * dir (a name-keyed cache would reuse a stale tree after the harness
-    * regenerates data — same discipline as Avro/CsvBronze). */
-  def writeXml(spark: SparkSession, dir: String): String = {
-    val root = xmlRoot
-    val fp = AvroBronze.fingerprint(dir)
-    val fpFile = new File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new File(s"$root/_SUCCESS").isFile && fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!cached) {
-      val silver = FlightPipeline.silver(spark, dir)
-      val asStrings = silver.select(FlightPipeline.silverCols.map { c =>
-        col(c).cast("string").as(c)
-      }: _*)
-      asStrings
+    * dir (`graft.Workspace.fixture`). */
+  def writeXml(spark: SparkSession, dir: String): String =
+    graft.Workspace.fixture(xmlRoot, dir)(
+      FlightPipeline.silver(spark, dir)
+        .select(FlightPipeline.silverCols.map(c => col(c).cast("string").as(c)): _*)
         .repartition(16)
         .write.mode("overwrite")
         .format("xml")
         .option("rowTag", "flight").option("rootTag", "flights")
-        .save(root)
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-    }
-    root
-  }
+        .save(_))
 
   /** Bronze scan: native XML datasource, explicit all-string schema,
     * explicit rowTag — no inference pass over the tree. */

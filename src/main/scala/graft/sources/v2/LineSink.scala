@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
   StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.Fs.deleteTree
+
 /** The WRITE half of the DataSource V2 surface (the read half is
   * [[SyntheticProvider]]): a line-format sink implementing the full V2
   * commit protocol the way every transactional writer must —
@@ -41,8 +43,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * renames on the driver — the standard V2 cost model.
   */
 /** Oracle-checked round trip through the sink: write `nation` out via
-  * the V2 protocol (fixture cached per source-content fingerprint, the
-  * AvroBronze discipline), read the committed lines back with the text
+  * the V2 protocol (fixture cached per source-content fingerprint,
+  * `graft.Workspace.fixture`), read the committed lines back with the text
   * source, parse, and aggregate per region — while DuckDB computes the
   * same aggregate from the parquet directly. A hash match proves the
   * write path is LOSSLESS end to end, not just protocol-correct. */
@@ -74,40 +76,16 @@ object LineSink extends graft.QueryModule {
     else spark.read.text(dirs: _*)
   }
 
-  private def fingerprint(dir: String): String = {
-    val entries = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
-  private def fixture(spark: SparkSession, dir: String): String = {
-    val root = s"target/line_sink/${new java.io.File(dir).getName}"
-    val fp = fingerprint(dir)
-    val fpFile = new java.io.File(s"$root/_SOURCE_FINGERPRINT")
-    val cached = new java.io.File(s"$root/_SUCCESS").isFile &&
-      fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath),
-        "UTF-8") == fp
-    if (!cached) {
-      graft.Fs.deleteTree(java.nio.file.Paths.get(root))
+  def roundtrip(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val root = graft.Workspace.fixture(graft.Workspace.lake("line_sink", dir), dir) { root =>
       graft.ParquetRead(spark, s"$dir/nation.parquet")
         .select(col("n_nationkey").cast("long").as("k"),
           col("n_name"), col("n_regionkey").cast("long").as("rk"))
         .repartition(3)
         .write.format("graft.sources.v2.LineSinkProvider")
         .option("path", root).mode("append").save()
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
     }
-    root
-  }
-
-  def roundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val root = fixture(spark, dir)
     spark.read.text(s"$root/part-*")
       .filter(length($"value") > 0)
       .select(split($"value", "\t").as("f"))
@@ -190,14 +168,6 @@ class LineBatchWrite(schema: StructType, path: String) extends BatchWrite {
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     deleteTree(Paths.get(path).resolve("_tmp"))
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }
 
 class LineWriterFactory(schema: StructType, path: String)
@@ -297,14 +267,6 @@ class LineStreamingWrite(schema: StructType, path: String)
     messages.foreach {
       case LineTaskCommit(staged) => Files.deleteIfExists(Paths.get(staged))
       case _ => ()
-    }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
     }
 }
 

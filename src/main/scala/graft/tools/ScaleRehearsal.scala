@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * second moments (Σ|bucket|²) that the 100 TB scale claims rest on.
   * Results land in SCALE.md.
   *
-  * Amplification happens in `target/rehearsal` — the driver's testdata
-  * tree is never touched. Runs under Bench's session at
+  * Amplification happens in the workspace's `rehearsal` tier
+  * (`graft.Workspace.lake`) — the source lake is never touched. Runs
+  * under Bench's session at
   * `SPARK_GRAFT_CPUS` slots (SCALE.md's rehearsals ran at 32).
   */
 object ScaleRehearsal {
@@ -38,7 +39,7 @@ object ScaleRehearsal {
     // optional 3rd arg: comma-separated stage-name filter, so a new
     // operator's growth row doesn't require re-running the whole chain
     val onlyStages = args.lift(2).map(_.split(",").toSet)
-    val dir = "target/rehearsal"
+    val dir = graft.Workspace.lake("rehearsal", srcDir)
     val spark = graft.Bench.session(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -2,7 +2,9 @@ package graft.llm
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import scala.jdk.CollectionConverters._
+
+import graft.{SparkSpec, Workspace}
 
 /** `embed_ivf_topk_indexed`: the amortized ANN serving path — answers
   * come from the fingerprint-keyed materialized index, and a repeat
@@ -14,18 +16,12 @@ class IvfTopkIndexedSpec extends SparkSpec {
     val first = Similarity.ivfTopkIndexed(spark, sf0001).collect().toSeq
     assert(first.nonEmpty && first.size == 15) // 5 queries x top-3
 
-    // locate the committed manifest for this corpus fingerprint
-    val cacheRoot = Paths.get("target/graft_ivf_cache")
-    val manifests = Files.walk(cacheRoot).iterator()
+    // the committed manifest for this corpus fingerprint
     val manifest = {
-      val found = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-      while (manifests.hasNext) {
-        val p = manifests.next()
-        if (p.getFileName.toString == "_MANIFEST" &&
-            p.toString.contains("sf0.001")) found += p
-      }
-      assert(found.nonEmpty, "no committed manifest found")
-      found.maxBy(Files.getLastModifiedTime(_))
+      val walk = Files.walk(Paths.get(Workspace.cache("ivf", Similarity.IvfIndexVersion, sf0001)))
+      try walk.iterator().asScala.filter(_.getFileName.toString == "_MANIFEST")
+        .maxBy(Files.getLastModifiedTime(_))
+      finally walk.close()
     }
     val mtime = Files.getLastModifiedTime(manifest)
 

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{Fs, JobLog, SparkSpec}
+import graft.{Fs, JobLog, SparkSpec, Workspace}
 
 /** The fixed cost of a served gold read: on an unchanged lake the
   * file-metadata gate, the manifest-resolved read and the planning launch
@@ -19,9 +19,7 @@ class GoldServeCostSpec extends SparkSpec {
     val work = Files.createTempDirectory("gold_serve_cost").toString
     lake(spark.read.parquet(s"$sf0001/lineitem.parquet"))
       .write.parquet(s"$work/lineitem.parquet")
-    // Gold's served tables live under this working-directory root
-    val cache = Paths.get("target/graft_gold_cache/v1",
-      java.net.URLEncoder.encode(work, "UTF-8")).toAbsolutePath
+    val cache = Paths.get(Workspace.cache("gold", 1, work))
     val jobs = new JobLog(spark)
     try {
       val built = Gold.goldMonthly(spark, work).collect().toSeq
