@@ -6,6 +6,8 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{
+  FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -43,11 +45,39 @@ object ParquetRead {
       case None => spark.read.parquet(paths: _*)
     }
 
+  /** The parquet files under `dirs`, read over one driver-side listing:
+    * the schema comes from the footer [[apply]] would pick, and the
+    * relation's file index is seeded with that same listing, so planning
+    * lists nothing again. `spark.read.parquet` of more than 32 paths
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`) lists
+    * them with a Spark job at every planning. */
+  def listed(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val roots = dirs.map { d =>
+      val p = new Path(d)
+      p.getFileSystem(conf).makeQualified(p)
+    }
+    val leaves = roots.map(r => r -> listLeaves(r.getFileSystem(conf), r)).toMap
+    footer(spark, conf, leaves.values.flatten.toSeq) match {
+      case None => spark.read.parquet(dirs: _*)
+      case Some(s) =>
+        val seeded = new FileStatusCache {
+          override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+            leaves.get(path).map(_.toArray)
+          override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        }
+        val index = new InMemoryFileIndex(spark, roots, Map.empty, None, seeded)
+        spark.baseRelationToDataFrame(HadoopFsRelation(index,
+          index.partitionSchema, s, None, new ParquetFileFormat, Map.empty)(spark))
+    }
+  }
+
   /** The schema `spark.read.parquet(paths: _*)` would infer, or None when
     * the paths hold no parquet leaf file. */
   private def schema(spark: SparkSession, paths: String*): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
-    val leaves = paths.flatMap { p =>
+    footer(spark, conf, paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
       roots(fs, fs.makeQualified(path)).flatMap { r =>
@@ -55,7 +85,13 @@ object ParquetRead {
         else if (hidden(r.getPath.getName)) Nil
         else Seq(r)
       }
-    }.sortBy(_.getPath.toString)
+    })
+  }
+
+  /** The schema of the footer Spark's inference picks among `leaves`. */
+  private def footer(spark: SparkSession, conf: Configuration,
+      files: Seq[FileStatus]): Option[StructType] = {
+    val leaves = files.sortBy(_.getPath.toString)
     def named(n: String) = leaves.find(_.getPath.getName == n)
     named("_common_metadata").orElse(named("_metadata"))
       .orElse(leaves.find(f => !summary(f.getPath.getName)))

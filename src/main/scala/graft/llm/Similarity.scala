@@ -1,5 +1,7 @@
 package graft.llm
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2257,7 +2259,10 @@ object Similarity extends graft.QueryModule {
     * index is cell-partitioned), the model is K ≈ N/250 broadcastable
     * centroids, and refresh cost after one mutated source partition is
     * that partition alone — the `SCALE.md` amortization story, now a
-    * bench row instead of prose. */
+    * bench row instead of prose.
+    *
+    * A corpus change keys a new `fp=` root; once its model and index are
+    * complete, the roots of earlier corpus versions are deleted. */
   def ivfTopkIndexed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.DecimalDot.register(spark)
@@ -2288,6 +2293,14 @@ object Similarity extends graft.QueryModule {
       derive, s"$root/index")
       .select($"vec_id", $"cell")
       .join(emb.select($"vec_id", $"embedding"), "vec_id")
+    // this root's model and index are complete: the roots of earlier
+    // corpus versions under the same lake key are unreachable garbage
+    val siblings = java.nio.file.Files.list(java.nio.file.Paths.get(root).getParent)
+    try siblings.iterator().asScala.toList.filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("fp=") && n != s"fp=$fp"
+    }.foreach(graft.Fs.deleteTree)
+    finally siblings.close()
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
     graft.streaming.AnnServeStream.probeBatch(spark, queries, model, members, 3)

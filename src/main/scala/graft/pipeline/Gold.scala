@@ -45,25 +45,25 @@ object Gold extends graft.QueryModule {
     * the build equality.
     *
     * At 100 TB (round 15 — the read path no longer row-hashes): a
-    * SERVE over an unchanged lake is one driver-side stat pass over
-    * the fact table's files plus a manifest-resolved parquet read of
-    * |groups| rows — the r14 form re-fingerprinted the whole fact
-    * table per dashboard read (a measured 2.5× floor regression at
-    * sf0.1 and a scale-killer at 100×). Only when the file metadata
-    * trips does the row-hash tier run, and it still localizes the
-    * rebuild to |changed months| (GoldIncrementalSpec's one-month
-    * receipt is unchanged).
+    * SERVE over an unchanged lake is one driver-side stat pass over the
+    * fact table's files, compared with the per-file freshness record,
+    * plus a manifest-resolved read of |groups| rows (the r14 form
+    * re-fingerprinted the fact table per dashboard read: 2.5× at sf0.1).
+    * When a landed correction replaces a month's files, only those files
+    * are fingerprinted, and the months the record says they held are
+    * rebuilt from them meanwhile (GoldServeCostSpec pins such a cycle at
+    * 6 Spark jobs; GoldIncrementalSpec's one-month receipt is unchanged).
     *
     * The served table's schema comes from one parquet footer read on the
-    * driver (`Incremental.read` via [[graft.ParquetRead]]), and the frame
-    * is read as ONE partition: a served gold table holds |groups| rows
-    * (one per month, or per carrier and month), small at any scale, so
-    * the registered ORDER BY runs as a local sort — no range-partition
-    * sampling job and no exchange. On an unchanged lake a served gold
-    * query therefore plans without a job and executes as exactly one
-    * (GoldServeCostSpec); past 32 months Spark lists the partition
-    * directories with one more job at planning
-    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). */
+    * driver, and its file index from the same driver-side listing of the
+    * manifest's directories (`Incremental.read` via
+    * [[graft.ParquetRead.listed]]); the frame is read as ONE partition:
+    * a served gold table holds |groups| rows (one per month, or per
+    * carrier and month), small at any scale, so the registered ORDER BY
+    * runs as a local sort — no range-partition sampling job and no
+    * exchange. On an unchanged lake a served gold query therefore plans
+    * without a job, however many months are committed, and executes as
+    * exactly one (GoldServeCostSpec). */
   private def servedGold(spark: SparkSession, dir: String, name: String,
       build: DataFrame => DataFrame): DataFrame = {
     graft.sources.Incremental.serve(spark,

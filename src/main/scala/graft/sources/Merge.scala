@@ -95,19 +95,21 @@ object Merge {
     // (a GDPR request batch), inherently driver-sized.
     val hitDf = target.filter(col(keyCol).isin(keys: _*))
       .select(col(partCol).cast("string")).distinct()
-    val hit = Incremental.collectParts(hitDf, maxParts)
+    val hit = Incremental.collectBounded(hitDf, maxParts).map(_.getString(0))
     if (hit.isEmpty) return Nil
-    val survivors = Incremental
-      .semiRestrict(target, col(partCol).cast("string"), hitDf)
+    val survivors = target
+      .join(broadcast(hitDf.toDF("__part_key")),
+        col(partCol).cast("string") === col("__part_key"), "left_semi")
       .filter(!col(keyCol).isin(keys: _*))
       .localCheckpoint()
     // emptied = hit partitions with no survivor row; dynamic overwrite
     // silently skips them, so they are removed explicitly. Computed
     // distributed, collected bounded (⊆ hit) — and BEFORE the overwrite,
     // while hitDf's lazy plan still reads the pre-delete files.
-    val emptied = Incremental.collectParts(
+    val emptied = Incremental.collectBounded(
       hitDf.toDF("p").except(
         survivors.select(col(partCol).cast("string").as("p"))), maxParts)
+      .map(_.getString(0))
     survivors.write
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")

@@ -71,25 +71,27 @@ object SilverStream {
         to_timestamp(col("EnqueuedTimeUtc"), "yyyy-MM-dd'T'HH:mm:ss")
           .as("enqueuedTime"))
 
+  /** Types of the payload fields silver casts, in place. */
+  private val silverCasts = Map("year" -> "int", "month" -> "int",
+    "arr_flights" -> "double", "arr_del15" -> "double",
+    "arr_delay" -> "double", "produced_at" -> "bigint")
+
   /** T3: the silver transformation on a streaming envelope frame
     * (body:binary, enqueuedTime:timestamp) — identical operators to the
-    * batch path, stateless. */
+    * batch path, stateless. The casts are one projection: each chained
+    * `withColumn` re-analyzes the whole plan at every stream start. */
   def silver(spark: SparkSession, envelopes: DataFrame): DataFrame = {
     import spark.implicits._
     DecodeTrimJson.register(spark)
     val bodyCol = envelopes.columns.find(_.equalsIgnoreCase("body"))
       .getOrElse(throw new IllegalArgumentException("no body column"))
-    envelopes
-      .withColumn("body_str", expr(s"decode_trim_json(`$bodyCol`)"))
-      .withColumn("data", from_json($"body_str", SilverJson.payloadSchema))
+    val parsed = envelopes
+      .select($"enqueuedTime", from_json(expr(s"decode_trim_json(`$bodyCol`)"),
+        SilverJson.payloadSchema).as("data"))
       .select($"enqueuedTime", $"data.*")
       .na.drop(Seq("year"))
-      .withColumn("year", $"year".cast("int"))
-      .withColumn("month", $"month".cast("int"))
-      .withColumn("arr_flights", $"arr_flights".cast("double"))
-      .withColumn("arr_del15", $"arr_del15".cast("double"))
-      .withColumn("arr_delay", $"arr_delay".cast("double"))
-      .withColumn("produced_at", $"produced_at".cast("bigint"))
+    parsed.select(parsed.columns.toSeq.map(c =>
+      silverCasts.get(c).fold(parsed(c))(t => parsed(c).cast(t).as(c))): _*)
   }
 
   /** Streaming exact dedup: brokers deliver at-least-once, so replayed

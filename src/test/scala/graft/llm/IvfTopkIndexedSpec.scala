@@ -30,4 +30,33 @@ class IvfTopkIndexedSpec extends SparkSpec {
     assert(Files.getLastModifiedTime(manifest) == mtime,
       "unchanged corpus triggered an index rebuild")
   }
+
+  test("a regenerated corpus leaves one fp= root: superseded roots are deleted") {
+    val work = Files.createTempDirectory("ivf_roots").toString
+    def regenerate(): Unit =
+      spark.read.parquet(s"$sf0001/embeddings.parquet")
+        .write.mode("overwrite").parquet(s"$work/embeddings.parquet")
+    val lakeKey = Paths.get(Workspace.cache("ivf", Similarity.IvfIndexVersion, work))
+    def roots() = {
+      val s = Files.list(lakeKey)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("fp=")).toList.sorted
+      finally s.close()
+    }
+    try {
+      regenerate()
+      val first = Similarity.ivfTopkIndexed(spark, work).collect().toSeq
+      val firstRoots = roots()
+      assert(firstRoots.size == 1)
+      for (_ <- 1 to 2) {
+        regenerate()
+        assert(Similarity.ivfTopkIndexed(spark, work).collect().toSeq == first)
+        val now = roots()
+        assert(now.size == 1 && now != firstRoots, s"IVF roots after a regeneration: $now")
+      }
+    } finally {
+      graft.Fs.deleteTree(lakeKey)
+      graft.Fs.deleteTree(Paths.get(work))
+    }
+  }
 }

@@ -98,17 +98,17 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
-  test("data path restricts via broadcast semi-join, not isin literals") {
-    withFixture { (srcPath, outPath) =>
-      Incremental.refresh(spark, readSrc(srcPath), partCol, derive, outPath)
-      // dirty one partition, then inspect the plan the data path builds
-      val restricted = Incremental.semiRestrict(
-        readSrc(srcPath), col(partCol).cast("string"),
-        spark.createDataFrame(Seq(Tuple1("1995-03"))).toDF("part"))
-      val plan = restricted.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-        s"expected broadcast left-semi data path:\n$plan")
-      assert(restricted.count() > 0)
+  test("data path restricts stale partitions with a literal InSet, no join") {
+    withFixture { (srcPath, _) =>
+      val parts = readSrc(srcPath).select(partCol).distinct()
+        .collect().map(_.getString(0)).toSeq.take(20)
+      assert(parts.size > 10) // past OptimizeIn's InSet threshold
+      val restricted = Incremental.ofParts(readSrc(srcPath), partCol, parts)
+      val plan = restricted.queryExecution.optimizedPlan.toString
+      assert(plan.contains("INSET") && !plan.contains("Join"),
+        s"expected an InSet filter and no join:\n$plan")
+      assert(restricted.count() ==
+        readSrc(srcPath).filter(col(partCol).isin(parts: _*)).count())
     }
   }
 

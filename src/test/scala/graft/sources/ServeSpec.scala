@@ -40,16 +40,16 @@ class ServeSpec extends SparkSpec {
         derive, outPath).collect().toSet
       assert(first.nonEmpty)
       val manifest = Paths.get(outPath, "_MANIFEST")
-      val sig = Paths.get(outPath, "_SOURCE_SIG")
+      val sig = Paths.get(outPath, "_SOURCE_FILES")
       assert(Files.exists(manifest) && Files.exists(sig),
-        "serve must commit both the manifest and the file signature")
+        "serve must commit both the manifest and the freshness record")
       val mMtime = Files.getLastModifiedTime(manifest)
       val sMtime = Files.getLastModifiedTime(sig)
 
       // repeat serve: identical rows, and NEITHER commit artifact is
       // rewritten — the witness that the file-metadata gate short-
       // circuited before the refresh (a refresh over a fresh source
-      // commits nothing, but the sig rewrite would bump sMtime)
+      // commits nothing, but the record rewrite would bump sMtime)
       val second = Incremental.serve(spark, readSrc(srcPath), partCol,
         derive, outPath).collect().toSet
       assert(second == first)

@@ -57,6 +57,35 @@ class CaptureStreamSpec extends SparkSpec {
     // proven by the exact total count, not by key distinctness)
   }
 
+  test("silver as one projection equals the chained withColumn form on the Avro capture") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("capsilver").toFile.getAbsolutePath
+    AvroBronze.writeCapture(spark, sf0001, root)
+    // the envelope projection of captureEnvelopes, as a batch read
+    val envelopes = AvroBronze.readCapture(spark, root)
+      .select($"Body".as("body"), $"SequenceNumber".as("sequenceNumber"),
+        to_timestamp($"EnqueuedTimeUtc", "yyyy-MM-dd'T'HH:mm:ss").as("enqueuedTime"))
+    // the form silver had before its casts became one projection
+    graft.functions.DecodeTrimJson.register(spark)
+    val chained = envelopes
+      .withColumn("body_str", expr("decode_trim_json(`body`)"))
+      .withColumn("data", from_json($"body_str", SilverJson.payloadSchema))
+      .select($"enqueuedTime", $"data.*")
+      .na.drop(Seq("year"))
+      .withColumn("year", $"year".cast("int"))
+      .withColumn("month", $"month".cast("int"))
+      .withColumn("arr_flights", $"arr_flights".cast("double"))
+      .withColumn("arr_del15", $"arr_del15".cast("double"))
+      .withColumn("arr_delay", $"arr_delay".cast("double"))
+      .withColumn("produced_at", $"produced_at".cast("bigint"))
+    val one = SilverStream.silver(spark, envelopes)
+    assert(one.schema == chained.schema)
+    val rows = one.collect().toSeq
+    assert(rows.nonEmpty)
+    assert(rows.groupBy(identity).map { case (r, xs) => r -> xs.size } ==
+      chained.collect().toSeq.groupBy(identity).map { case (r, xs) => r -> xs.size })
+  }
+
   test("maxFilesPerTrigger bounds each micro-batch (backlog backpressure)") {
     // the knob that keeps a restart-after-downtime from loading the
     // whole backlog into ONE giant micro-batch: with maxFilesPerTrigger
