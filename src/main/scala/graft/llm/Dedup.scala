@@ -113,9 +113,10 @@ object Dedup extends graft.QueryModule {
     * refresh's OWN per-source-partition manifest fingerprints (that is
     * its whole job; r12's extra full-corpus fingerprint in the root
     * path re-rooted on ANY corpus change, so the daily delta rebuilt
-    * everything — the r13 fix). Later invocations fingerprint per
-    * partition (one linear scan), recompute only changed partitions,
-    * and pay the probe: delta signatures ([[sigOf]], codegen'd)
+    * everything — the r13 fix). Later invocations pass the
+    * file-metadata gate (a driver-side stat pass) or fingerprint only
+    * the changed files, recompute only the partitions those held, and
+    * pay the probe: delta signatures ([[sigOf]], codegen'd)
     * band-joined into the index, 4-hash Jaccard estimate per
     * collision, both bands unioned + distinct (the
     * `streaming/NeardupStream.detect` contract, batch form).
@@ -129,10 +130,11 @@ object Dedup extends graft.QueryModule {
     * rows — the standing corpus is touched only through the index. */
   /** Refresh-and-read the STANDING signature index — the maintained
     * artifact [[lshIndexed]] probes and (round 14) the artifact
-    * [[lshPreflight]] prices from. One call = one source fingerprint
-    * scan (staleness), recompute of only the changed source
-    * partitions, one vacuum, one manifest-resolved read — the
-    * probe-cost class, never a corpus re-shingle. */
+    * [[lshPreflight]] prices from. One call = one driver-side stat
+    * pass over the corpus files (staleness), a fingerprint of only the
+    * changed files and a recompute of only the partitions they hold,
+    * one vacuum, one manifest-resolved read — the probe-cost class,
+    * never a corpus re-shingle. */
   private[graft] def sigIndex(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir, "documents")
     // cache root = (algo version, source dir) ONLY: per-partition

@@ -1,7 +1,5 @@
 package graft.llm
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1947,10 +1945,13 @@ object Similarity extends graft.QueryModule {
     * Built once per (re-)clustering; [[assignToCells]] assigns against
     * it without recomputing it — the split that makes the materialized
     * IVF index incrementally maintainable. */
-  def autoKCentroids(spark: SparkSession, dir: String): DataFrame = {
+  def autoKCentroids(spark: SparkSession, dir: String): DataFrame =
+    autoKCentroids(spark, Tables(spark, dir, "embeddings"))
+
+  /** [[autoKCentroids]] over the `(vec_id, embedding)` rows of `emb`. */
+  def autoKCentroids(spark: SparkSession, emb: DataFrame): DataFrame = {
     import spark.implicits._
     graft.functions.DecimalDot.register(spark)
-    val emb = Tables(spark, dir, "embeddings")
     val facts = emb.agg(count(lit(1)).as("n"))
       .withColumn("k", greatest(lit(2L), ceil($"n" / 250.0).cast("long")))
     val hashed = emb.crossJoin(broadcast(facts))
@@ -2233,74 +2234,59 @@ object Similarity extends graft.QueryModule {
        |FROM ($cosineTopkSql) b
        |JOIN ($ivfpqTopkSql) v ON b.vec_id = v.vec_id""".stripMargin
 
-  /** Bump when the assignment SEMANTICS change (e.g. the round-9 flat →
-    * two-level switch = v2, single→multi-probe routing = v3): [[ivfTopkIndexed]]'s on-disk cache is
-    * keyed by this + the corpus fingerprint, so an algorithm change
-    * invalidates stale indexes instead of serving answers the current
-    * oracle can no longer reproduce. */
-  private[graft] val IvfIndexVersion = 3
+  /** Bump when the assignment SEMANTICS or the cache layout change (the
+    * round-9 flat → two-level switch = v2, single→multi-probe routing =
+    * v3, the model served as an Incremental table beside the index = v4):
+    * [[ivfTopkIndexed]]'s on-disk cache root is keyed by this, so an
+    * algorithm change invalidates stale indexes instead of serving
+    * answers the current oracle can no longer reproduce. */
+  private[graft] val IvfIndexVersion = 4
 
   /** embed_ivf_topk_indexed: batch ANN top-3 served FROM the
     * partition-incrementally materialized IVF index — the registered,
     * benched form of the production claim that the inline model build
-    * ([[ivfAutoK]]'s from-scratch cost) is never paid per query. First
-    * invocation builds the frozen model + (vec_id, cell) index through
-    * `sources/Incremental.refresh` under a (algo-version, corpus-
-    * fingerprint) cache key; every later invocation fingerprints the
-    * corpus (one linear scan), sees the manifest fresh, and pays only
-    * the probe: nearest-cell assignment of the 5 query vectors against
-    * the broadcast model, one equi-join on `cell` into the index, exact
-    * decimal cosine, per-query top-3. Index == batch rebuild is proven
-    * in IvfIncrementalSpec; the DuckDB oracle runs the self-contained
-    * two-level assignment, so hash-equality here certifies the SERVED
-    * answers, not just the inline form.
+    * ([[ivfAutoK]]'s from-scratch cost) is never paid per query. The
+    * frozen model and the (vec_id, cell) index are two
+    * `sources/Incremental` tables under one (algo-version, lake) root:
+    * the model one partition over the embeddings scan, the index
+    * label-partitioned over the same scan, its kernel fingerprint
+    * combined with the model's committed partition fingerprint
+    * (`Incremental.dependentKernel`), so a code or corpus change rebuilds
+    * the model and then the whole index. Every later
+    * invocation passes both file-metadata gates (a driver-side stat
+    * pass, no data read) and pays only the probe: nearest-cell
+    * assignment of the 5 query vectors against the broadcast model, one
+    * equi-join on `cell` into the index, exact decimal cosine, per-query
+    * top-3. Index == batch rebuild is proven in IvfIncrementalSpec; the
+    * DuckDB oracle runs the self-contained two-level assignment, so
+    * hash-equality here certifies the SERVED answers, not just the
+    * inline form.
     *
     * At 100 TB: the probe plan touches only the queried cells (the
     * index is cell-partitioned), the model is K ≈ N/250 broadcastable
-    * centroids, and refresh cost after one mutated source partition is
-    * that partition alone — the `SCALE.md` amortization story, now a
-    * bench row instead of prose.
-    *
-    * A corpus change keys a new `fp=` root; once its model and index are
-    * complete, the roots of earlier corpus versions are deleted. */
+    * centroids, and a repeat probe over an unchanged corpus reads no
+    * corpus data — the `SCALE.md` amortization story, now a bench row
+    * instead of prose. */
   def ivfTopkIndexed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.DecimalDot.register(spark)
     val emb = Tables(spark, dir, "embeddings")
-    // corpus freshness from FILE METADATA (round 15 — the r14 watch
-    // item: the r14 form paid a full xxhash64 corpus scan PER READ
-    // just to key the cache root; a driver-side stat pass is the
-    // evidence every metastore staleness check uses, and the row-hash
-    // form stays as the fallback for file-less plans)
-    val fp = graft.sources.Incremental.fileSig(emb)
-      .map(java.lang.Long.toHexString).getOrElse {
-        val fpRow = emb.agg(
-          expr("bit_xor(xxhash64(vec_id, embedding, label))").as("fp"),
-          count(lit(1)).as("n")).head()
-        java.lang.Long.toHexString(fpRow.getLong(0)) + "_" + fpRow.getLong(1)
-      }
-    val root = graft.Workspace.cache("ivf", IvfIndexVersion, dir) + s"/fp=$fp"
-    val modelPath = s"$root/model"
-    if (!new java.io.File(s"$modelPath/_SUCCESS").exists())
-      autoKCentroids(spark, dir).write.mode("overwrite").parquet(modelPath)
-    val model = graft.ParquetRead(spark, modelPath)
+    val root = graft.Workspace.cache("ivf", IvfIndexVersion, dir)
+    val model = graft.sources.Incremental.serve(spark,
+      emb.withColumn("model", lit("autok")), "model",
+      src => autoKCentroids(spark, src).withColumn("model", lit("autok")),
+      s"$root/model")
+      .select($"cell", $"centroid")
+    val modelFp = graft.sources.Incremental.currentEntries(s"$root/model").head.fp
     def derive(src: DataFrame): DataFrame =
       assignToCells(spark, src, model)
         .join(src.select($"vec_id", $"label"), "vec_id")
-    // within an fp-keyed root the corpus cannot drift, so the serve
-    // gate keeps repeat probes at read-only cost (no per-read row-hash)
     val members = graft.sources.Incremental.serve(spark, emb, "label",
-      derive, s"$root/index")
+      derive, s"$root/index",
+      kernelFp = Some(graft.sources.Incremental.dependentKernel(
+        graft.sources.Incremental.deriveFingerprint(derive _), modelFp)))
       .select($"vec_id", $"cell")
       .join(emb.select($"vec_id", $"embedding"), "vec_id")
-    // this root's model and index are complete: the roots of earlier
-    // corpus versions under the same lake key are unreachable garbage
-    val siblings = java.nio.file.Files.list(java.nio.file.Paths.get(root).getParent)
-    try siblings.iterator().asScala.toList.filter { p =>
-      val n = p.getFileName.toString
-      n.startsWith("fp=") && n != s"fp=$fp"
-    }.foreach(graft.Fs.deleteTree)
-    finally siblings.close()
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
     graft.streaming.AnnServeStream.probeBatch(spark, queries, model, members, 3)

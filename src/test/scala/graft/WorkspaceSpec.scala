@@ -54,6 +54,27 @@ class WorkspaceSpec extends SparkSpec {
       assert(warm == cold)
     }
 
+  test("every table root under a cache tier holds only its manifest, a per-file record and generations") {
+    val caches = Workspace.tiers.filter(t => t.startsWith("graft_") && t.endsWith("_cache"))
+    Workspace.reset()
+    readers.filter(_._2.exists(caches.contains)).foreach { case (q, _) =>
+      SparkEntry.queries(q)(spark, sf0001).collect()
+    }
+    caches.foreach { t =>
+      // graft_<kind>_cache/v<version>/<lake>/<table>
+      val tables = children(Workspace.root.resolve(t)).flatMap(children).flatMap(children)
+      assert(tables.nonEmpty, s"$t holds no table")
+      tables.foreach { table =>
+        val names = children(table).map(_.getFileName.toString)
+        assert(names.contains("_MANIFEST") && names.contains("_SOURCE_FILES") &&
+          names.forall(n => n == "_MANIFEST" || n == "_SOURCE_FILES" || n.startsWith("gen=")),
+          s"$table holds $names")
+        assert(Files.readAllLines(table.resolve("_SOURCE_FILES")).get(0).endsWith("\tper-file"),
+          s"$table's record is not per-file")
+      }
+    }
+  }
+
   test("every directory under the workspace root is a declared tier") {
     val stray = children(Workspace.root).filter(Files.isDirectory(_))
       .map(_.getFileName.toString).filterNot(Workspace.tiers.contains)

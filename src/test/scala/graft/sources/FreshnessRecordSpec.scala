@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import graft.{Fs, SparkSpec}
+import graft.{Fs, JobLog, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -60,8 +60,10 @@ class FreshnessRecordSpec extends SparkSpec {
   }
 
   private def serve(lake: Path, out: String): DataFrame =
-    Incremental.serve(spark, spark.read.parquet(lake.toString), partCol,
-      derive, out, deriveFpOverride = Some(1L))
+    serveOf(spark.read.parquet(lake.toString), out)
+
+  private def serveOf(source: DataFrame, out: String): DataFrame =
+    Incremental.serve(spark, source, partCol, derive, out, kernelFp = Some(1L))
 
   private def rows(df: DataFrame) = df.orderBy(partCol).collect().toSeq
 
@@ -121,7 +123,7 @@ class FreshnessRecordSpec extends SparkSpec {
       val (_, first) = scans(serve(lake, out))
       assert(first == Seq(12L, 12L), "a first build fingerprints and derives the whole lake")
       val record = Incremental.readRecord(out).get
-      assert(record.perFile)
+      assert(Files.readAllLines(Paths.get(out, "_SOURCE_FILES")).get(0) == "kernel\t1\tper-file")
       assert(record.files.map(f => f.path.split('/').last -> f.parts.map(_._1)) ==
         months.map(m => s"$m.parquet" -> Seq(m)))
       assert(record.files.forall(_.path.contains("/lake%20dir%20%2541x/")))
@@ -211,7 +213,7 @@ class FreshnessRecordSpec extends SparkSpec {
       serve(lake, out)
       val before = gens(out)
       val (_, files) = scans(Incremental.serve(spark, spark.read.parquet(lake.toString),
-        partCol, derive, out, deriveFpOverride = Some(2L)))
+        partCol, derive, out, kernelFp = Some(2L)))
       assert(files == Seq(12L, 12L), files)
       val after = gens(out)
       assert(after.keySet == before.keySet && after.forall { case (p, g) => g > before(p) })
@@ -221,9 +223,10 @@ class FreshnessRecordSpec extends SparkSpec {
 
   test("a table without a record is served with no partition rebuilt; only the record is written") {
     withLake { (lake, out) =>
-      // the layout a refresh without a freshness record leaves
+      // a table whose freshness record is lost
       Incremental.refresh(spark, spark.read.parquet(lake.toString), partCol,
-        derive, out, deriveFp = 1L)
+        derive, out, kernelFp = Some(1L))
+      Files.delete(Paths.get(out, "_SOURCE_FILES"))
       val lines = manifest(out)
       val mtime = Files.getLastModifiedTime(Paths.get(out, "_MANIFEST"))
       val (served, files) = scans(serve(lake, out))
@@ -232,6 +235,21 @@ class FreshnessRecordSpec extends SparkSpec {
         Files.getLastModifiedTime(Paths.get(out, "_MANIFEST")) == mtime)
       assert(Incremental.readRecord(out).exists(_.files.size == 12))
       assert(rows(served) == fromScratch(lake))
+    }
+  }
+
+  test("a source the session has cached is gated by its files: a repeat serve runs no job") {
+    withLake { (lake, out) =>
+      val cached = spark.read.parquet(lake.toString).cache()
+      val jobs = new JobLog(spark)
+      try {
+        serveOf(cached, out)
+        assert(Incremental.readRecord(out).exists(_.files.size == 12),
+          "serving a cached source must write the per-file record")
+        val (served, sites) = jobs(serveOf(cached, out))
+        assert(sites.isEmpty, s"a repeat serve over a cached source launched $sites")
+        assert(rows(served) == fromScratch(lake))
+      } finally { jobs.close(); cached.unpersist() }
     }
   }
 
@@ -244,7 +262,7 @@ class FreshnessRecordSpec extends SparkSpec {
       def failing(src: DataFrame): DataFrame =
         derive(src.filter(boom(col("o_orderkey")) =!= -1L))
       def serveFailing() = Incremental.serve(spark, spark.read.parquet(lake.toString),
-        partCol, failing, out, deriveFpOverride = Some(1L))
+        partCol, failing, out, kernelFp = Some(1L))
       serveFailing()
       val lines = manifest(out)
       val record = Incremental.readRecord(out)

@@ -98,6 +98,21 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
+  test("refresh refuses a source that is not one file scan: an in-memory frame, a join") {
+    withFixture { (srcPath, outPath) =>
+      import spark.implicits._
+      val inMemory = Seq(("1995-01", 1L), ("1995-02", 2L)).toDF(partCol, "o_orderkey")
+      val joined = readSrc(srcPath).join(inMemory.select(col(partCol)), partCol)
+      for (source <- Seq(inMemory, joined)) {
+        val e = intercept[IllegalArgumentException] {
+          Incremental.refresh(spark, source, partCol, derive, outPath)
+        }
+        assert(e.getMessage.contains("must be one file scan"), e.getMessage)
+      }
+      assert(!new java.io.File(outPath).exists(), "a refused source materialized something")
+    }
+  }
+
   test("data path restricts stale partitions with a literal InSet, no join") {
     withFixture { (srcPath, _) =>
       val parts = readSrc(srcPath).select(partCol).distinct()

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.xbean.asm9.{ClassReader, ClassVisitor, ClassWriter, Label,
+  MethodVisitor, Opcodes}
 
 /** Round-15 serve-path contract (`Incremental.serve`): the read path of
   * a materialized derivation must cost a manifest-resolved read when
@@ -86,7 +88,7 @@ class ServeSpec extends SparkSpec {
       def d2(src: DataFrame): DataFrame =
         src.groupBy(col(partCol)).agg((count(lit(1)) * 2).as("n"))
       val v1 = Incremental.serve(spark, readSrc(srcPath), partCol,
-        d1 _, outPath, deriveFpOverride = Some(1L))
+        d1 _, outPath, kernelFp = Some(1L))
         .agg(sum(col("n"))).head.getLong(0)
 
       // the HAZARD the fingerprint exists to close, pinned as spec:
@@ -94,14 +96,14 @@ class ServeSpec extends SparkSpec {
       // kernel's data (this is exactly what a same-file lambda edit
       // looked like before round 15, when nothing hashed the kernel)
       val stale = Incremental.serve(spark, readSrc(srcPath), partCol,
-        d2 _, outPath, deriveFpOverride = Some(1L))
+        d2 _, outPath, kernelFp = Some(1L))
         .agg(sum(col("n"))).head.getLong(0)
       assert(stale == v1, "unchanged fp must serve the committed data")
 
       // fingerprint bump: every partition reads stale, the whole table
       // rebuilds under the new kernel in one refresh
       val fresh = Incremental.serve(spark, readSrc(srcPath), partCol,
-        d2 _, outPath, deriveFpOverride = Some(2L))
+        d2 _, outPath, kernelFp = Some(2L))
         .agg(sum(col("n"))).head.getLong(0)
       assert(fresh == 2 * v1,
         s"fp change must rebuild under the new kernel (got $fresh, want ${2 * v1})")
@@ -113,17 +115,38 @@ class ServeSpec extends SparkSpec {
     val b = Incremental.deriveFingerprint(derive _)
     assert(a == b, "same kernel must fingerprint identically across expansions")
     assert(a != 0L)
-    // file-sig plumbing: in-memory sources have no file evidence and
-    // must report None (serve then always takes the row-hash path)
-    import spark.implicits._
-    assert(Incremental.fileSig(Seq(1, 2).toDF("x")).isEmpty)
-    val onDisk = readSrcFixture()
-    val s1 = Incremental.fileSig(onDisk, 7L)
-    assert(s1.isDefined && s1 == Incremental.fileSig(onDisk, 7L))
-    assert(s1 != Incremental.fileSig(onDisk, 8L),
-      "the kernel fingerprint must be mixed into the file signature")
   }
 
-  private def readSrcFixture(): DataFrame =
-    graft.Tables(spark, sf0001, "region")
+  /** `classfile` re-emitted through ASM with every line number mapped by
+    * `line` and every `ldc` constant by `ldc`. */
+  private def rewrite(classfile: Array[Byte], line: Int => Int,
+      ldc: AnyRef => AnyRef): Array[Byte] = {
+    val out = new ClassWriter(0)
+    new ClassReader(classfile).accept(new ClassVisitor(Opcodes.ASM9, out) {
+      override def visitMethod(access: Int, name: String, desc: String,
+          sig: String, exceptions: Array[String]): MethodVisitor =
+        new MethodVisitor(Opcodes.ASM9, super.visitMethod(access, name, desc, sig, exceptions)) {
+          override def visitLineNumber(l: Int, start: Label): Unit =
+            super.visitLineNumber(line(l), start)
+          override def visitLdcInsn(v: AnyRef): Unit = super.visitLdcInsn(ldc(v))
+        }
+    }, 0)
+    out.toByteArray
+  }
+
+  test("the kernel fingerprint ignores line numbers and sees a changed constant") {
+    val cls = "graft.sources.Incremental$"
+    val in = getClass.getClassLoader.getResourceAsStream(s"${cls.replace('.', '/')}.class")
+    val bytes = try in.readAllBytes() finally in.close()
+    val same = rewrite(bytes, identity, identity)
+    val shifted = rewrite(bytes, _ + 2, identity)
+    assert(!java.util.Arrays.equals(same, shifted), "no line number was shifted")
+    assert(Incremental.codeFingerprint(cls, shifted) == Incremental.codeFingerprint(cls, bytes))
+    val edited = rewrite(bytes, identity, {
+      case "_MANIFEST" => "_MANIFEST2"
+      case v => v
+    })
+    assert(!java.util.Arrays.equals(same, edited), "no constant was changed")
+    assert(Incremental.codeFingerprint(cls, edited) != Incremental.codeFingerprint(cls, bytes))
+  }
 }
