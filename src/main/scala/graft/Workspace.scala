@@ -1,18 +1,21 @@
 package graft
 
 import java.io.File
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Path, Paths}
 
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+
+import graft.sources.Incremental
 
 /** Every on-disk tier of derived data, under `target/` of the working
   * directory: fixture lakes keyed by [[lake]], incremental tiers keyed by
-  * [[cache]] (README "Derived data"). The CSV and XML lakes are not keyed
-  * by scale factor (`<kind>/data`): the CSV oracle SQL embeds the
-  * absolute file glob and `QueryModule.oracles` is built without a
-  * source dir; the XML lake shares the key. A run over another lake
-  * rewrites them through the fingerprint gate. The test JVM runs in its own working directory
+  * [[cache]] (README "Derived data"). Both are judged fresh by one
+  * predicate over one per-file record: [[fixture]] for the lakes,
+  * `sources.Incremental.refresh` for the caches. The CSV lake is not
+  * keyed by scale factor (`csv_bronze/data`): its oracle SQL embeds the
+  * absolute file glob and `SparkEntry.oracleSql`, the driver contract,
+  * is built without a source dir, so a run over another lake rewrites
+  * it through the gate. The test JVM runs in its own working directory
   * (`build.sbt`), so tests share no tier with Verify or Bench. */
 object Workspace {
 
@@ -44,49 +47,26 @@ object Workspace {
     * output) stays. */
   def reset(): Unit = tiers.foreach(t => Fs.deleteTree(root.resolve(t)))
 
-  /** The fingerprint-gated fixture write: returns `root` as it stands when
-    * its `_SUCCESS` marker and `_SOURCE_FINGERPRINT` match the current
-    * [[fingerprint]] of `dir`; otherwise deletes `root`, runs `write(root)`
-    * and records the fingerprint last, by an atomic rename, so a crash
-    * mid-write leaves a root the next call rebuilds. Without the
-    * fingerprint a regenerated lake under the same path would be served
-    * its stale fixture while the oracle reads the new data. */
-  def fixture(root: String, dir: String)(write: String => Unit): String = {
-    val fp = fingerprint(dir)
-    val fpFile = Paths.get(root, "_SOURCE_FINGERPRINT")
-    val fresh = Files.isRegularFile(Paths.get(root, "_SUCCESS")) &&
-      Files.isRegularFile(fpFile) && new String(Files.readAllBytes(fpFile), UTF_8) == fp
-    if (!fresh) {
+  /** The gated fixture write: returns `root` as it stands when its
+    * freshness record (the `_SOURCE_FILES` of
+    * [[graft.sources.Incremental]]) names the code fingerprint of `write`
+    * and the size and mtime of every file `source` scans, the one
+    * predicate every derived tier is judged by
+    * (`Incremental.current`); otherwise deletes `root`, runs
+    * `write(root)` and commits the record last, by an atomic rename. A
+    * crash at any point leaves no record, or one that does not match, so
+    * the next call rebuilds. `source` is the one file scan the fixture is
+    * derived from, and `write` derives only from that table: a fixture
+    * is rebuilt when that table's files or the code of the class that
+    * holds `write` change, and not when another table of the lake does. */
+  def fixture(root: String, source: DataFrame)(write: String => Unit): String = {
+    val files = Incremental.sourceFiles(source)
+    val kernel = Incremental.deriveFingerprint(write)
+    if (!Incremental.readRecord(root).exists(Incremental.current(_, kernel, files))) {
       Fs.deleteTree(Paths.get(root))
       write(root)
-      val tmp = Files.createTempFile(Paths.get(root), "_fingerprint.", ".tmp")
-      Files.write(tmp, fp.getBytes(UTF_8))
-      Files.move(tmp, fpFile, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      Incremental.writeRecord(root, Incremental.Record(kernel, files))
     }
     root
-  }
-
-  /** Content fingerprint of source lake `dir`: the MD5 of
-    * `path:length:mtime` over every `*.parquet` table in it. A
-    * directory-shaped table contributes each leaf data file under it
-    * (the names Spark reads: no `_` or `.` prefix), since rewriting a
-    * file inside a directory changes neither the directory's length nor
-    * its mtime. */
-  private def fingerprint(dir: String): String = {
-    val base = Paths.get(dir)
-    def hidden(p: Path): Boolean = base.relativize(p).iterator().asScala
-      .exists(n => n.toString.startsWith("_") || n.toString.startsWith("."))
-    val files = Option(base.toFile.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.endsWith(".parquet")).toSeq.flatMap { t =>
-        val walk = Files.walk(t.toPath)
-        try walk.iterator().asScala.filter(p => Files.isRegularFile(p) && !hidden(p)).toList
-        finally walk.close()
-      }
-    val entries = files.map(p => base.relativize(p).toString -> p.toFile).sortBy(_._1)
-      .map { case (name, f) => s"$name:${f.length}:${f.lastModified}" }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.mkString("|").getBytes(UTF_8))
-      .map("%02x".format(_)).mkString
   }
 }

@@ -159,7 +159,8 @@ object Media extends graft.QueryModule {
     * consumes a columnar scan of (id, type, payload BINARY) rows, which
     * is what a `binaryFile` ingest of a real media lake produces. */
   def writeImages(spark: SparkSession, dir: String): String =
-    graft.Workspace.fixture(graft.Workspace.lake("media_images", dir), dir)(
+    graft.Workspace.fixture(graft.Workspace.lake("media_images", dir),
+      Tables(spark, dir, "documents"))(
       imageTable(spark, dir).write.mode("overwrite").parquet(_))
 
   /** A media lake written by [[writeImages]], [[writeGifs]] or
@@ -257,10 +258,10 @@ object Media extends graft.QueryModule {
       }
   }
 
-  /** Materialize [[gifTable]] content-fingerprint-cached, like
-    * [[writeImages]]. */
+  /** Materialize [[gifTable]] behind the same gate as [[writeImages]]. */
   def writeGifs(spark: SparkSession, dir: String): String =
-    graft.Workspace.fixture(graft.Workspace.lake("media_gifs", dir), dir)(
+    graft.Workspace.fixture(graft.Workspace.lake("media_gifs", dir),
+      Tables(spark, dir, "documents"))(
       gifTable(spark, dir).write.mode("overwrite").parquet(_))
 
   /** Batched decode over the GIF lake — the same [[decodeBatch]]
@@ -897,10 +898,11 @@ object Media extends graft.QueryModule {
       }
   }
 
-  /** Materialize [[wavTable]] as a binary-column parquet lake (same
-    * fingerprint cache as the image lake). */
+  /** Materialize [[wavTable]] as a binary-column parquet lake, behind the
+    * same gate as [[writeImages]]. */
   def writeWavs(spark: SparkSession, dir: String): String =
-    graft.Workspace.fixture(graft.Workspace.lake("media_wavs", dir), dir)(
+    graft.Workspace.fixture(graft.Workspace.lake("media_wavs", dir),
+      Tables(spark, dir, "documents"))(
       wavTable(spark, dir).write.mode("overwrite").parquet(_))
 
   /** REAL audio decode kernel — `javax.sound.sampled` (the JDK's WAV

@@ -51,10 +51,10 @@ object AvroBronze extends graft.QueryModule {
   def writeCapture(spark: SparkSession, dir: String): String =
     writeCapture(spark, dir, graft.Workspace.lake("avro_bronze", dir))
 
-  /** The capture tree under `root`, rewritten only when the source
-    * lake's content changed (`graft.Workspace.fixture`). */
+  /** The capture tree under `root`, rewritten only when `lineitem` or the
+    * writer's code changed (`graft.Workspace.fixture`). */
   def writeCapture(spark: SparkSession, dir: String, root: String): String =
-    graft.Workspace.fixture(root, dir)(
+    graft.Workspace.fixture(root, graft.Tables(spark, dir, "lineitem"))(
       SilverJson.bronze(spark, dir)
         .filter(captureFilter)
         // One capture window per shipdate month. Day/hour/min/sec are

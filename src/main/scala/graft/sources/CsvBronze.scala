@@ -49,10 +49,10 @@ object CsvBronze extends graft.QueryModule {
   /** Render the 17-column silver fixture as all-string CSV. Doubles go
     * through DECIMAL(18,4) so the cell bytes are identical no matter
     * which engine later parses them (raw double→string may use
-    * scientific notation). Cached on a content fingerprint of the
-    * source dir (`graft.Workspace.fixture`). */
+    * scientific notation). Rebuilt when `lineitem` or the writer's code
+    * changes (`graft.Workspace.fixture`). */
   def writeCsv(spark: SparkSession, dir: String): String =
-    graft.Workspace.fixture(csvRoot, dir)(
+    graft.Workspace.fixture(csvRoot, graft.Tables(spark, dir, "lineitem"))(
       FlightPipeline.silver(spark, dir)
         .select(FlightPipeline.silverCols.map { c =>
           if (metricCols.contains(c))

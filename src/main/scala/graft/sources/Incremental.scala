@@ -22,7 +22,9 @@ import org.apache.xbean.asm9.{ClassReader, ClassWriter}
   * replaced, and rebuild their months while it does ([[refresh]] holds
   * the staleness tiers and the record format). Every derived cache tier
   * (gold, sig, srp, phash, wavfp and the IVF model and index) is served
-  * through this one path.
+  * through this one path, and every derived tier, the fixture lakes of
+  * `graft.Workspace.fixture` included, is judged fresh by one predicate
+  * over the same record ([[current]]).
   *
   * A source must be ONE file scan (projections and filters over a
   * single `HadoopFsRelation`): its files are the relation's, read from
@@ -224,7 +226,7 @@ object Incremental {
     * analyzed plan's one `HadoopFsRelation` (a cached source's optimized
     * plan no longer shows its relation); a source that is not one file
     * scan with a resolvable `_metadata.file_path` is refused. */
-  private def sourceFiles(source: DataFrame): Seq[SourceFile] = {
+  private[graft] def sourceFiles(source: DataFrame): Seq[SourceFile] = {
     val relation = source.queryExecution.analyzed.collectLeaves() match {
       case Seq(r: LogicalRelation) => Some(r.relation).collect { case h: HadoopFsRelation => h }
       case _ => None
@@ -263,7 +265,13 @@ object Incremental {
     } catch { case _: Exception => None }
   }
 
-  private def writeRecord(path: String, r: Record): Unit = {
+  /** Whether `r` records the derived data of `files` under `kernel`:
+    * the one freshness predicate of every derived tier. */
+  private[graft] def current(r: Record, kernel: Long, files: Seq[SourceFile]): Boolean =
+    r.kernel == kernel && r.files.map(_.stat) == files.map(_.stat)
+
+  /** Commits `r` as the record at `path`, by an atomic rename. */
+  private[graft] def writeRecord(path: String, r: Record): Unit = {
     val body = s"kernel\t${java.lang.Long.toHexString(r.kernel)}\tper-file" +:
       r.files.flatMap { f =>
         s"file\t${f.size}\t${f.mtime}\t${f.path}" +: f.parts.map { case (p, fp, n) =>
@@ -362,7 +370,7 @@ object Incremental {
     val files = sourceFiles(source)
     val record = readRecord(path).filter(r =>
       r.kernel == kernel && Files.exists(manifestPath(path)))
-    if (record.exists(_.files.map(_.stat) == files.map(_.stat))) return Nil
+    if (record.exists(current(_, kernel, files))) return Nil
     val (stale, recorded) = update(spark, source, partCol, derive, path,
       maxParts, kernel, files, record.fold(Seq.empty[SourceFile])(_.files))
     writeRecord(path, Record(kernel, recorded))

@@ -26,11 +26,13 @@ object JsonLake extends graft.QueryModule {
 
   /** Write the JSONL fixture: one line per document; every 7th doc_id
     * emits a line truncated mid-object (unparseable, deterministic).
-    * Cached per source-content fingerprint (`graft.Workspace.fixture`). */
+    * Rebuilt when `documents` or the writer's code changes
+    * (`graft.Workspace.fixture`). */
   def writeLake(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    graft.Workspace.fixture(graft.Workspace.lake("json_lake", dir), dir)(
-      Tables(spark, dir, "documents")
+    val documents = Tables(spark, dir, "documents")
+    graft.Workspace.fixture(graft.Workspace.lake("json_lake", dir), documents)(
+      documents
         .select(
           when($"doc_id" % 7 === 0,
             concat(lit("{\"doc_id\":"), $"doc_id", lit(",\"lang\":\"tr")))

@@ -28,11 +28,12 @@ object OrcLake extends graft.QueryModule {
   /** Deterministic subset keeps the fixture write cheap. */
   private val subset = "l_orderkey % 4 = 0"
 
-  /** Write the ORC fixture once per source-data content
+  /** Write the ORC fixture once per `lineitem` content and writer code
     * (`graft.Workspace.fixture`). */
-  def writeOrc(spark: SparkSession, dir: String): String =
-    graft.Workspace.fixture(graft.Workspace.lake("orc_lake", dir), dir)(
-      Tables(spark, dir, "lineitem")
+  def writeOrc(spark: SparkSession, dir: String): String = {
+    val lineitem = Tables(spark, dir, "lineitem")
+    graft.Workspace.fixture(graft.Workspace.lake("orc_lake", dir), lineitem)(
+      lineitem
         .filter(subset)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"), col("l_linestatus"),
@@ -40,6 +41,7 @@ object OrcLake extends graft.QueryModule {
         .repartition(col("l_returnflag")) // one task per partition dir
         .write.mode("overwrite").partitionBy("l_returnflag")
         .format("orc").save(_))
+  }
 
   /** Returned-lines revenue by line status, read from the pruned ORC
     * partition. The `l_returnflag = 'R'` predicate is a partition

@@ -51,13 +51,13 @@ object XmlBronze extends graft.QueryModule {
     "security_ct", "late_aircraft_ct", "arr_cancelled", "arr_diverted",
     "arr_delay", "carrier_delay")
 
-  /** Not keyed by scale factor (see `graft.Workspace`). */
-  def xmlRoot: String = graft.Workspace.lake("xml_bronze", "data")
+  /** The XML lake of source lake `dir`, keyed by its scale factor. */
+  def xmlRoot(dir: String): String = graft.Workspace.lake("xml_bronze", dir)
 
-  /** Render the silver fixture as XML, fingerprint-cached on the source
-    * dir (`graft.Workspace.fixture`). */
+  /** Render the silver fixture as XML, rebuilt when `lineitem` or the
+    * writer's code changes (`graft.Workspace.fixture`). */
   def writeXml(spark: SparkSession, dir: String): String =
-    graft.Workspace.fixture(xmlRoot, dir)(
+    graft.Workspace.fixture(xmlRoot(dir), graft.Tables(spark, dir, "lineitem"))(
       FlightPipeline.silver(spark, dir)
         .select(FlightPipeline.silverCols.map(c => col(c).cast("string").as(c)): _*)
         .repartition(16)

@@ -43,11 +43,12 @@ import graft.Fs.deleteTree
   * renames on the driver — the standard V2 cost model.
   */
 /** Oracle-checked round trip through the sink: write `nation` out via
-  * the V2 protocol (fixture cached per source-content fingerprint,
-  * `graft.Workspace.fixture`), read the committed lines back with the text
-  * source, parse, and aggregate per region — while DuckDB computes the
-  * same aggregate from the parquet directly. A hash match proves the
-  * write path is LOSSLESS end to end, not just protocol-correct. */
+  * the V2 protocol (fixture rebuilt when `nation` or this writer's code
+  * changes, `graft.Workspace.fixture`), read the committed lines back
+  * with the text source, parse, and aggregate per region — while DuckDB
+  * computes the same aggregate from the parquet directly. A hash match
+  * proves the write path is LOSSLESS end to end, not just
+  * protocol-correct. */
 object LineSink extends graft.QueryModule {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
@@ -78,8 +79,9 @@ object LineSink extends graft.QueryModule {
 
   def roundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = graft.Workspace.fixture(graft.Workspace.lake("line_sink", dir), dir) { root =>
-      graft.ParquetRead(spark, s"$dir/nation.parquet")
+    val nation = graft.ParquetRead(spark, s"$dir/nation.parquet")
+    val root = graft.Workspace.fixture(graft.Workspace.lake("line_sink", dir), nation) { root =>
+      nation
         .select(col("n_nationkey").cast("long").as("k"),
           col("n_name"), col("n_regionkey").cast("long").as("rk"))
         .repartition(3)

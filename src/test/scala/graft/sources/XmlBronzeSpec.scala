@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
 import graft.SparkSpec
@@ -45,5 +47,19 @@ class XmlBronzeSpec extends SparkSpec {
     val files = new java.io.File(root).listFiles()
       .filter(f => f.getName.startsWith("part-")).toSeq
     assert(files.size == 16, s"expected 16 xml part files, got ${files.size}")
+  }
+
+  test("two lakes get two XML roots, and writing the second leaves the first's record") {
+    val other = Files.createTempDirectory("xml_other")
+    Files.copy(Paths.get(s"$sf0001/lineitem.parquet"), other.resolve("lineitem.parquet"))
+    try {
+      val first = XmlBronze.writeXml(spark, sf0001)
+      val rec = Paths.get(first, "_SOURCE_FILES")
+      val built = Files.getLastModifiedTime(rec)
+      val second = XmlBronze.writeXml(spark, other.toString)
+      assert(second != first && second == XmlBronze.xmlRoot(other.toString))
+      assert(Files.isRegularFile(Paths.get(second, "_SOURCE_FILES")))
+      assert(Files.getLastModifiedTime(rec) == built, "the second lake rewrote the first's XML")
+    } finally Seq(Paths.get(XmlBronze.xmlRoot(other.toString)), other).foreach(graft.Fs.deleteTree)
   }
 }
